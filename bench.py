@@ -1221,8 +1221,8 @@ def _r10_crop_times(
     points, and the new operator):
 
     - ``bpe_train`` / ``bpe_encode_ids``: the heaviest per-token Python
-      work in the repo — the per-round explode+groupBy merge trainer
-      (64 merges) and the greedy mapInPandas encoder over the full
+      work in the repo — the word-count scan plus driver-local merge
+      trainer (64 merges) and the greedy mapInPandas encoder over the full
       documents corpus (encode reuses merges trained OUTSIDE the
       timer: the artifact is trained once, applied nightly).
     - ``cosine_topk_exact_scan`` vs ``cosine_topk_int8_scan``: the
@@ -1281,18 +1281,6 @@ def _r10_crop_times(
         med, lo, hi = _timed_median(encode)
         times["bpe_encode_ids"] = med
         spread["bpe_encode_ids"] = [lo, hi]
-
-        # r11: the production-vocab path — distributed word count +
-        # driver-local incremental merge learning. Same 64-merge A/B
-        # against the per-round distributed loop above.
-        def train_incr64():
-            m = bpe.bpe_train_incremental(docs, n_merges=64)
-            assert len(m) >= 0
-
-        train_incr64()  # warm
-        med, lo, hi = _timed_median(train_incr64)
-        times["bpe_train_incr64"] = med
-        spread["bpe_train_incr64"] = [lo, hi]
 
         # NOTE: no deeper merge count on THIS corpus — it holds only 31
         # distinct words, so the pair space exhausts at 107 merges and a
@@ -1544,14 +1532,14 @@ def _r10_crop_times(
         # exhausts at 107 merges), but the unique corpus has a ~30k-word
         # vocabulary: training to exhaustion (~30.4k merges learned from
         # a 32k request) measures the real 32k-vocab operating point,
-        # INCLUDING the distributed 1 GB word-count scan. The per-round
-        # distributed trainer extrapolates to ~2.5 h here (one Spark job
-        # per merge); this point is the evidence the incremental path
-        # removes that wall. 2 samples (slope-section convention).
+        # INCLUDING the distributed 1 GB word-count scan. A per-merge
+        # Spark loop would extrapolate to ~2.5 h here (one Spark job per
+        # merge); the driver-local incremental trainer removes that wall.
+        # 2 samples (slope-section convention).
         from distributed_computing_platform_mapreduce_spark.operators import bpe
 
         def bpe_30k_1gb():
-            m = bpe.bpe_train_incremental(big, n_merges=32000)
+            m = bpe.bpe_train(big, n_merges=32000)
             assert len(m) >= 0
 
         bpe_30k_1gb()  # warm

@@ -10,28 +10,24 @@ merge-rank loop popularized by GPT-2's public ``bpe()`` reference.
 Scale shape
 -----------
 The classical trick IS the 100 TB story: merges are learned on the
-**distinct-word frequency table**, not the corpus. One corpus scan
-builds ``(word, count)`` (vocab-bounded — ~10⁷–10⁸ rows for web text,
-vs ~10¹² corpus tokens); every merge round then touches only that
-table:
+**distinct-word frequency table**, not the corpus. One distributed
+corpus scan builds ``(word, count)`` (vocab-bounded — ~10⁷–10⁸ rows
+for web text, vs ~10¹² corpus tokens); the table is collected once,
+behind a row gate, and merge learning runs driver-local:
 
-- pair counting is one ``explode`` + ``groupBy(pair).sum(count)`` over
-  the word table (partial aggregation applies — the shuffle carries at
-  most |distinct pairs| rows);
-- the argmax is a single-row driver collect (the bounded-scalar
-  pattern two-star CC and PageRank established);
-- the merge rewrite is one Arrow-batched pass over the word table
-  (words NOT containing the pair short-circuit in Python);
-- ``localCheckpoint`` every ``checkpoint_every`` rounds stops the plan
-  stacking n_merges Arrow stages deep (the CC/PageRank discipline).
+- pair counts live in a dict, a pair→words inverted index restricts
+  each round's recount to the words the merge touched, and a
+  lazy-deletion max-heap serves the argmax — O(touched words) per
+  merge, so 32k merges are seconds, with no Spark job per merge;
+- ``max_words`` caps the working set by frequency when even the word
+  table is too large for the driver; above ``max_word_table_rows``
+  training fails loudly instead of collecting.
 
 Merge learning is inherently sequential (merge r+1's counts depend on
-merge r) — no engine parallelizes ACROSS rounds; the distributed win
-is WITHIN each round, plus ``max_words`` to cap the working set by
-frequency when even the word table is huge. Encoding is embarrassingly
-parallel: merge ranks ride to executors as a closure-captured list
-(n_merges entries, KBs), and each Arrow batch memoizes per distinct
-word.
+merge r) — no engine parallelizes ACROSS rounds. Encoding is
+embarrassingly parallel: merge ranks ride to executors as a
+closure-captured list (n_merges entries, KBs), and each Arrow batch
+memoizes per distinct word.
 
 Determinism: pair argmax tie-breaks by (count desc, left asc, right
 asc); training is a pure function of the word-count table, and
@@ -73,7 +69,7 @@ def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     shuffled instead of ~10⁸. The downstream ``sum`` of partials equals
     the old global ``count(*)`` exactly. Per-task memory is bounded by
     the task's distinct vocabulary (the same vocab-bounded argument
-    :func:`bpe_train_incremental` documents); output batches are
+    :func:`bpe_train` documents); output batches are
     chunked so one giant vocabulary can't produce an oversized Arrow
     batch."""
     from collections import Counter
@@ -121,30 +117,13 @@ def _merge_once(syms: list, left: str, right: str, glued: str) -> list:
     return out
 
 
-def _merge_udf(syms_t, left: str, right: str, glued: str):
-    """Per-round merge rewrite as an Arrow-batched UDF (factory so the
-    closure binds this round's pair — default-arg capture would break
-    pandas_udf's type-hint inference)."""
-
-    @F.pandas_udf(syms_t)
-    def apply_merge(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda syms: _merge_once(list(syms), left, right, glued)
-            if left in set(syms)
-            else list(syms)
-        )
-
-    return apply_merge
-
-
 def bpe_train(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 100,
     min_pair_count: int = 2,
     max_words: int | None = None,
-    checkpoint_every: int = 8,
-    local_threshold: int = 5_000_000,
+    max_word_table_rows: int = 5_000_000,
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from a document corpus.
 
@@ -153,85 +132,38 @@ def bpe_train(
     early when the best remaining pair's weighted count falls below
     ``min_pair_count`` (merging singletons is pure overfit).
 
+    The CORPUS scan is the distributed part (:func:`word_counts`);
+    merge learning runs driver-local over the aggregated distinct-word
+    table with :func:`_train_incremental_from_counts`. That table is
+    vocab-bounded (~10⁷–10⁸ rows for web text — it does not grow with
+    corpus size), and a per-merge Spark loop would cost ≥1 job per
+    merge (hours at 32k merges).
+
     ``max_words`` keeps only the most frequent words (count desc, word
     asc tie-break) — the standard working-set cap when even the
     distinct-word table is large; at web scale the dropped tail is
-    singleton noise that cannot win a merge anyway.
-
-    ``local_threshold`` (r16): size-adaptive execution, the same
-    bounded-driver pattern as ``connected_components_twostar``'s
-    residual solve. The distributed per-round loop costs ≥1 Spark job
-    per merge (~0.3 s scheduling floor × n_merges, measured 20 s for 64
-    merges at sf0.1), while the distinct-word table is VOCAB-bounded —
-    it does not grow with corpus size (~10⁷–10⁸ rows for web text).
-    When the table fits the bound, it is collected once and trained
-    with :func:`_train_incremental_from_counts`, which produces EXACTLY
-    the distributed loop's merge sequence (same (count desc, left asc,
-    right asc) tie-break, same ``min_pair_count`` stop — pinned by the
-    equality tests). 0 disables (tests cover the distributed loop
-    through it); the distributed loop remains the path for genuinely
-    unbounded word tables.
-    """
-    from distributed_computing_platform_mapreduce_spark.shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
+    singleton noise that cannot win a merge anyway. The collect is
+    gated by ``max_word_table_rows`` and fails LOUDLY above it (the
+    bounded-collect rule every driver-side gather in this repo
+    follows)."""
     words = word_counts(df, text_col)
     if max_words is not None:
         words = words.orderBy(F.desc("count"), F.asc("word")).limit(max_words)
-    if local_threshold:
-        # checkpoint so the count() probe's corpus scan is paid once and
-        # reused by whichever branch runs
-        words = words.localCheckpoint(eager=False)
-        if words.count() <= local_threshold:
-            rows = words.collect()
-            return _train_incremental_from_counts(
-                [(r["word"], r["count"]) for r in rows], n_merges, min_pair_count
-            )
-    # chars: Python list(word) codepoints + EOW — identical to
-    # _encode_word's symbol alphabet. (The former JVM F.split at every
-    # inter-char position operated on UTF-16 code units, mangling
-    # non-BMP chars into lone surrogates that encode-side codepoint
-    # symbols could never match.)
-    syms_udf_t = T.ArrayType(T.StringType())
-
-    @F.pandas_udf(syms_udf_t)
-    def to_syms(w: pd.Series) -> pd.Series:
-        return w.map(lambda word: list(word) + [EOW])
-
-    words = words.select(to_syms("word").alias("syms"), "count").localCheckpoint(
-        eager=False
+    # checkpoint before the gate probe: count() and collect() otherwise
+    # each pay a full corpus scan
+    words = words.localCheckpoint(eager=False)
+    n_rows = words.count()
+    if n_rows > max_word_table_rows:
+        raise ValueError(
+            f"distinct-word table holds {n_rows} rows >"
+            f" max_word_table_rows={max_word_table_rows}; cap the working"
+            " set with max_words (frequency tail can't win merges) or"
+            " raise the gate if the driver has the memory"
+        )
+    rows = words.collect()
+    return _train_incremental_from_counts(
+        [(r["word"], r["count"]) for r in rows], n_merges, min_pair_count
     )
-
-    syms_t = T.ArrayType(T.StringType())
-    merges: list[tuple[str, str]] = []
-    for r in range(n_merges):
-        pairs = (
-            words.select(
-                F.explode(
-                    F.zip_with(
-                        F.slice(F.col("syms"), 1, F.size("syms") - 1),
-                        F.slice(F.col("syms"), 2, F.size("syms") - 1),
-                        lambda a, b: F.struct(a.alias("left"), b.alias("right")),
-                    )
-                ).alias("pair"),
-                "count",
-            )
-            .groupBy("pair.left", "pair.right")
-            .agg(F.sum("count").alias("n"))
-        )
-        best = pairs.orderBy(F.desc("n"), F.asc("left"), F.asc("right")).take(1)
-        if not best or best[0]["n"] < min_pair_count:
-            break
-        left, right = best[0]["left"], best[0]["right"]
-        merges.append((left, right))
-        glued = left + right
-
-        words = words.select(
-            _merge_udf(syms_t, left, right, glued)("syms").alias("syms"), "count"
-        )
-        if (r + 1) % checkpoint_every == 0:
-            words = words.localCheckpoint(eager=False)
-    return merges
 
 
 def _train_incremental_from_counts(
@@ -243,10 +175,10 @@ def _train_incremental_from_counts(
     table: pair counts live in a dict, a pair→words inverted index
     restricts each round's recount to the words the merge actually
     touched, and a lazy-deletion max-heap serves the argmax. Exactly
-    the merge sequence :func:`bpe_train`'s full-recount loop produces
-    (same (count desc, left asc, right asc) tie-break, same
-    ``min_pair_count`` stop) — pinned by the equality test — at
-    O(touched words) per round instead of O(all words)."""
+    the merge sequence a full recount per round produces (same (count
+    desc, left asc, right asc) tie-break, same ``min_pair_count`` stop)
+    — pinned by the twin tests — at O(touched words) per round instead
+    of O(all words)."""
     import heapq
 
     syms_list = [list(w) + [EOW] for w, _ in word_counts]
@@ -304,58 +236,6 @@ def _train_incremental_from_counts(
                 bump((a, b), c, idx)
         pair_counts.pop(pair, None)
     return merges
-
-
-def bpe_train_incremental(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 100,
-    min_pair_count: int = 2,
-    max_words: int | None = None,
-    max_word_table_rows: int = 5_000_000,
-) -> list[tuple[str, str]]:
-    """:func:`bpe_train` for production merge counts (32k–50k).
-
-    The distributed per-round loop is driver-round-trip bound: each
-    merge costs ≥1 Spark job (~0.3 s scheduling floor), so 32k merges
-    take hours NO MATTER how little work each round does — the r10
-    verdict's "one operator whose plan I would not ship at its
-    production operating point". The architecture real tokenizer
-    pipelines use is the right one here: the CORPUS scan is the
-    distributed part (``word_counts`` — the 100 TB job), and merge
-    learning runs driver-local over the aggregated distinct-word
-    frequency table, which is vocab-bounded (~10⁷–10⁸ rows for web
-    text, ~300 MB — it does not grow with corpus size). The in-memory
-    loop is the classical incremental trainer: a pair→words inverted
-    index makes each round O(words touched by the merge), so 32k
-    merges are minutes, not hours.
-
-    The collect is gated by ``max_word_table_rows`` and fails LOUDLY
-    when the table exceeds it (the bounded-collect rule every
-    driver-side gather in this repo follows) — pass ``max_words`` to
-    cap the working set by frequency first (the dropped singleton tail
-    cannot win a merge anyway).
-
-    Merge-sequence output is EXACTLY :func:`bpe_train`'s (same
-    tie-break, same stop rule) — pinned by the equality test."""
-    words = word_counts(df, text_col)
-    if max_words is not None:
-        words = words.orderBy(F.desc("count"), F.asc("word")).limit(max_words)
-    # checkpoint before the gate probe: count() and collect() otherwise
-    # each pay a full corpus scan (r16 — one scan, reused)
-    words = words.localCheckpoint(eager=False)
-    n_rows = words.count()
-    if n_rows > max_word_table_rows:
-        raise ValueError(
-            f"distinct-word table holds {n_rows} rows >"
-            f" max_word_table_rows={max_word_table_rows}; cap the working"
-            " set with max_words (frequency tail can't win merges) or"
-            " raise the gate if the driver has the memory"
-        )
-    rows = words.collect()
-    return _train_incremental_from_counts(
-        [(r["word"], r["count"]) for r in rows], n_merges, min_pair_count
-    )
 
 
 def _encode_word(word: str, ranks: dict, cache: dict) -> list:

@@ -55,23 +55,15 @@ def _plan_key(df: DataFrame) -> object:
         return id(df)
 
 
-def _persist_via_registry(df: DataFrame, storage_level=None) -> DataFrame:
+def _persist_via_registry(df: DataFrame) -> DataFrame:
     """Persist ``df`` through the session-scoped registry: re-running
     the SAME plan releases its previous persist (every timed bench call
     starts cold — the documented policy), concurrent different
     pipelines keep their caches, and the LRU cap bounds total storage.
     Spark recomputes evicted plans, so eviction is never a correctness
-    event. Shared by the shingle table (minhash/LSH) and the gram-start
-    table (spans — r16).
-
-    ``storage_level``: pass ``StorageLevel.DISK_ONLY`` for tables whose
-    row count is O(corpus tokens) — the spans gram table at the 1 GB
-    bench point OOM'd an 8 GB heap when 32 scan tasks built in-memory
-    cache batches concurrently (measured r16); a disk reread is far
-    cheaper than the Python pass the persist avoids, and it adds zero
-    heap pressure."""
+    event. Holds the shingle table of :func:`minhash_lsh_pairs`."""
     key = _plan_key(df)
-    out = df.persist(storage_level) if storage_level is not None else df.persist()
+    out = df.persist()
     with _shingle_cache_lock:
         prior = _shingle_cache.pop(key, None)
         if prior is not None:
@@ -699,34 +691,21 @@ def dedup_survivors_cc(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    algorithm: str = "twostar",
     comps: DataFrame | None = None,
 ) -> DataFrame:
     """True transitive-closure dedup: keep exactly one doc (the min id)
     per connected component of the near-dup graph; docs in no pair
-    survive trivially. ``algorithm``: "twostar" (default — O(log n)
-    rounds, the 100 TB choice) or "label" (min-label propagation,
-    O(diameter) rounds; the two are asserted equal on generated graphs).
-    ``comps`` (r9): pass a precomputed ``(id, component)`` table to
-    share one CC solve across several survivor policies.
+    survive trivially. Components come from
+    :func:`connected_components_twostar` (O(log n) rounds, the 100 TB
+    choice); ``comps`` (r9): pass a precomputed ``(id, component)``
+    table to share one CC solve across several survivor policies, or
+    to use another solver's labels.
     """
-    comps = _resolve_components(pairs, algorithm, comps)
+    comps = comps if comps is not None else connected_components_twostar(pairs)
     losers = comps.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )
     return df.join(losers, id_col, "left_anti")
-
-
-def _resolve_components(
-    pairs: DataFrame, algorithm: str, comps: DataFrame | None
-) -> DataFrame:
-    if comps is not None:
-        return comps
-    if algorithm == "twostar":
-        return connected_components_twostar(pairs)
-    if algorithm == "label":
-        return connected_components(pairs)
-    raise ValueError(f"unknown algorithm {algorithm!r} (twostar|label)")
 
 
 def dedup_survivors_cc_best(
@@ -734,7 +713,6 @@ def dedup_survivors_cc_best(
     pairs: DataFrame,
     id_col: str = "doc_id",
     quality_col: str = "quality",
-    algorithm: str = "twostar",
     comps: DataFrame | None = None,
 ) -> DataFrame:
     """Transitive-closure dedup keeping the BEST doc per component —
@@ -757,7 +735,7 @@ def dedup_survivors_cc_best(
             raise ValueError(
                 f"dedup_survivors_cc_best reserves column name {reserved!r}"
             )
-    comps = _resolve_components(pairs, algorithm, comps)
+    comps = comps if comps is not None else connected_components_twostar(pairs)
     members = df.select(
         F.col(id_col), F.col(quality_col).alias("__q")
     ).join(comps.withColumnRenamed("id", id_col), id_col)

@@ -35,11 +35,6 @@ def _hadoop_path(spark: SparkSession, path: str):
     return fs, jpath
 
 
-def path_exists(spark: SparkSession, path: str) -> bool:
-    fs, jpath = _hadoop_path(spark, path)
-    return bool(fs.exists(jpath))
-
-
 def _has_committed_data(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` holds at least one COMMITTED data file (any
     file not named ``_*``/``.*``, at any partition depth). A crash
@@ -47,7 +42,7 @@ def _has_committed_data(spark: SparkSession, path: str) -> bool:
     only ``_temporary`` debris; a bare ``fs.exists`` probe then wedges
     the stream permanently (every retry reads an empty sink and
     throws), so 'exists but nothing committed' must be classified as
-    first-trigger — the same committed-only rule ``_index_versions``
+    first-trigger — the same committed-only rule ``_committed_ids``
     applies to the dedup index.
 
     A lone ``_SUCCESS`` marker with ZERO data files does NOT count:
@@ -270,7 +265,9 @@ def incremental_dedup_sink(
     index is folded into a new base ``v=<batch_id>`` and older
     base/delta dirs are pruned strictly AFTER the new ``_SUCCESS``
     lands; a crash mid-prune leaves ignorable stale dirs, never a
-    damaged index.
+    damaged index. The same prune deletes crash debris: uncommitted
+    (no ``_SUCCESS``) ``v=``/``d=`` dirs with an id below the new base,
+    which no later trigger can write again.
 
     Replay determinism: a replayed batch finds its OWN committed dir
     (``v=`` or ``d=`` — it is necessarily the newest) and re-derives
@@ -349,24 +346,27 @@ def incremental_dedup_sink(
                 f"{index_path}/v={bid}"
             )
             # prune every other committed base and every committed delta
-            # (all are folded into v=<bid>; none can postdate it)
+            # (all are folded into v=<bid>; none can postdate it), plus
+            # uncommitted crash debris below the new base
             fs, _ = _hadoop_path(spark, index_path)
             jp = spark._jvm.org.apache.hadoop.fs.Path
-            for v in _committed_ids(spark, index_path, "v="):
-                if v != bid:
-                    fs.delete(jp(f"{index_path}/v={v}"), True)
-            for d in _committed_ids(spark, index_path, "d="):
-                fs.delete(jp(f"{index_path}/d={d}"), True)
+            for prefix in ("v=", "d="):
+                for i, committed in _index_dirs(spark, index_path, prefix):
+                    stale = (prefix == "d=" or i != bid) if committed else i < bid
+                    if stale:
+                        fs.delete(jp(f"{index_path}/{prefix}{i}"), True)
         else:
             delta.write.mode("overwrite").parquet(f"{index_path}/d={bid}")
 
     return write_batch
 
 
-def _committed_ids(spark: SparkSession, index_path: str, prefix: str) -> list[int]:
-    """Sorted batch-ids of COMMITTED (``_SUCCESS`` present) index dirs
-    named ``<prefix><id>`` under ``index_path`` — partial directories
-    from crashed writes are invisible to readers."""
+def _index_dirs(
+    spark: SparkSession, index_path: str, prefix: str
+) -> list[tuple[int, bool]]:
+    """Sorted ``(batch id, committed)`` for every index dir named
+    ``<prefix><id>`` under ``index_path``; committed means its
+    ``_SUCCESS`` marker is present."""
     fs, root = _hadoop_path(spark, index_path)
     if not fs.exists(root):
         return []
@@ -380,14 +380,15 @@ def _committed_ids(spark: SparkSession, index_path: str, prefix: str) -> list[in
         except ValueError:
             continue
         ok = fs.exists(spark._jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS"))
-        if ok:
-            out.append(v)
+        out.append((v, bool(ok)))
     return sorted(out)
 
 
-def _index_versions(spark: SparkSession, index_path: str) -> list[int]:
-    """Back-compat alias: sorted committed BASE version ids."""
-    return _committed_ids(spark, index_path, "v=")
+def _committed_ids(spark: SparkSession, index_path: str, prefix: str) -> list[int]:
+    """Sorted batch-ids of COMMITTED (``_SUCCESS`` present) index dirs
+    named ``<prefix><id>`` under ``index_path`` — partial directories
+    from crashed writes are invisible to readers."""
+    return [v for v, ok in _index_dirs(spark, index_path, prefix) if ok]
 
 
 def _index_state(spark: SparkSession, index_path: str) -> tuple[int | None, list[int]]:

@@ -1259,7 +1259,15 @@ def test_forced_grouped_layout_applies_exchange_widening(spark):
     plan = forced._sc._jvm.PythonSQLUtils.explainString(
         forced._jdf.queryExecution(), "formatted"
     )
-    assert "hashpartitioning(k#" in plan and ", 200)" in plan, plan
+    # the width the code's own budget derivation gives on this host
+    session_width = skew._session_shuffle_partitions(spark)
+    width = skew.grouped_shuffle_partitions(
+        big_shape["est_value_bytes"],
+        session_width,
+        task_value_bytes=skew.grouped_task_value_bytes(spark),
+    )
+    assert width is not None and width > session_width
+    assert "hashpartitioning(k#" in plan and f", {width})" in plan, plan
     # output unchanged by the widened exchange
     assert forced.count() == 20
     # forced grouped WITHOUT a caller shape probes one itself (cached)
@@ -2183,13 +2191,14 @@ def test_dedup_survivors_cc_algorithms_agree(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
     star = {r["doc_id"] for r in dedup.dedup_survivors_cc(docs, pairs, "doc_id").collect()}
+    # label propagation stays the reference CC, supplied through comps=
     label = {
         r["doc_id"]
-        for r in dedup.dedup_survivors_cc(docs, pairs, "doc_id", algorithm="label").collect()
+        for r in dedup.dedup_survivors_cc(
+            docs, pairs, "doc_id", comps=dedup.connected_components(pairs)
+        ).collect()
     }
     assert star == label
-    with pytest.raises(ValueError, match="algorithm"):
-        dedup.dedup_survivors_cc(docs, pairs, "doc_id", algorithm="bogus")
 
 
 def test_connected_components_raises_on_nonconvergence(spark):
@@ -2982,10 +2991,10 @@ def test_bpe_train_matches_python_twin(spark):
 
 
 def test_bpe_train_incremental_equals_full_recount(spark):
-    """r11: the production-vocab path (distributed word count → driver-
-    local incremental trainer with the pair→words inverted index) must
-    produce EXACTLY the full-recount loop's merge sequence — same
-    tie-break, same min_pair_count stop, word-table collect gated."""
+    """bpe_train (distributed word count → driver-local incremental
+    trainer with the pair→words inverted index) must produce EXACTLY
+    the full-recount twin's merge sequence — same tie-break, same
+    min_pair_count stop, word-table collect gated."""
     from collections import Counter
 
     import pytest as _pytest
@@ -2994,19 +3003,18 @@ def test_bpe_train_incremental_equals_full_recount(spark):
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(_BPE_CORPUS)], ["doc_id", "text"])
     want = _twin_bpe_train(Counter(w for t in _BPE_CORPUS for w in t.split()), 40, 1)
-    assert bpe.bpe_train_incremental(df, n_merges=40, min_pair_count=1) == want
+    assert bpe.bpe_train(df, n_merges=40, min_pair_count=1) == want
     # default min_pair_count stop + max_words cap both honored
     counts = Counter(w for t in _BPE_CORPUS for w in t.split())
     top5 = dict(sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:5])
-    assert bpe.bpe_train_incremental(df, n_merges=10, max_words=5) == _twin_bpe_train(top5, 10)
+    assert bpe.bpe_train(df, n_merges=10, max_words=5) == _twin_bpe_train(top5, 10)
     # the driver-side collect is size-gated and fails loudly
     with _pytest.raises(ValueError, match="max_word_table_rows"):
-        bpe.bpe_train_incremental(df, n_merges=2, max_word_table_rows=3)
-    # deep-merge agreement on the raw count table (exhausts every pair:
-    # runs past the point where all words are single symbols)
+        bpe.bpe_train(df, n_merges=2, max_word_table_rows=3)
+    # deep-merge agreement (exhausts every pair: runs past the point
+    # where all words are single symbols)
     deep_want = _twin_bpe_train(counts, 10_000, 1)
-    deep_got = bpe._train_incremental_from_counts(sorted(counts.items()), 10_000, 1)
-    assert deep_got == deep_want
+    assert bpe.bpe_train(df, n_merges=10_000, min_pair_count=1) == deep_want
 
 
 def test_bpe_encode_matches_twin_and_roundtrips(spark):

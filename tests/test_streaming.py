@@ -753,7 +753,6 @@ def test_incremental_index_survives_crash_mid_write(spark, tmp_path):
     _SUCCESS, garbage content) is invisible, the replay of batch 1 reads
     v=0, and the recommit clobbers the partial dir."""
     from distributed_computing_platform_mapreduce_spark.streaming.sinks import (
-        _index_versions,
         incremental_dedup_sink,
         read_dedup_index,
     )
@@ -780,10 +779,9 @@ def test_incremental_index_survives_crash_mid_write(spark, tmp_path):
         partial = tmp_path / "sig_index" / name
         partial.mkdir(parents=True)
         (partial / "part-00000.parquet").write_bytes(b"\x00not parquet\x00")
-    assert _index_versions(spark, idx) == [0]  # partial dirs invisible
     from distributed_computing_platform_mapreduce_spark.streaming.sinks import _index_state
 
-    assert _index_state(spark, idx) == (0, [])
+    assert _index_state(spark, idx) == (0, [])  # partial dirs invisible
 
     sink(spark.createDataFrame(b1, schema), 1)  # the stream's retry
     # r16 layout: the retry commits d=1 (clobbering the partial), base
@@ -802,7 +800,9 @@ def test_incremental_index_compaction_cycle(spark, tmp_path):
     fold into a fresh base and older dirs prune; a replay of the
     compaction trigger itself re-derives the SAME base (not a delta),
     and the final index equals the batch-mode chain. compact_every=3
-    exercises base → delta → delta → compact → delta in 5 triggers."""
+    exercises base → delta → delta → compact → delta in 5 triggers.
+    The compaction also deletes uncommitted crash debris below the new
+    base."""
     from distributed_computing_platform_mapreduce_spark.operators import dedup as dd
     from distributed_computing_platform_mapreduce_spark.streaming.sinks import (
         _index_state,
@@ -831,10 +831,18 @@ def test_incremental_index_compaction_cycle(spark, tmp_path):
         (3, []),        # trigger 3: 2 deltas + this one >= 3 -> compact
         (3, [4]),       # trigger 4: delta
     ]
+    debris = [tmp_path / "sig_index" / name for name in ("v=1", "v=2", "d=0")]
     for i, b in enumerate(batches):
+        if i == 3:
+            # crashed writes: partial dirs (no _SUCCESS) below the base
+            # trigger 3 is about to commit
+            for partial in debris:
+                partial.mkdir()
+                (partial / "part-00000.parquet").write_bytes(b"\x00not parquet\x00")
         sink(spark.createDataFrame(b, schema), i)
         assert _index_state(spark, idx) == expected_states[i], f"trigger {i}"
         if i == 3:
+            assert not any(p.exists() for p in debris)
             # replay of the COMPACTION trigger must re-take the base
             # decision and leave an identical state, not append a delta
             sink(spark.createDataFrame(b, schema), 3)
