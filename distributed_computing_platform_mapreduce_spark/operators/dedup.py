@@ -262,15 +262,13 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    cache_shingles: bool = True,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH banding, verified exactly.
 
     1. ONE exploded (id, shingle) table feeds everything — signatures,
-       sizes, and both verification sides (``cache_shingles`` persists
-       it so the n-gram construction runs once; a 100 TB pipeline would
-       materialize this table to storage instead);
+       sizes, and both verification sides (it is persisted so the n-gram
+       construction runs once; a 100 TB pipeline would materialize this
+       table to storage instead);
     2. signatures (num_hashes mins over universal hashes of the shingle
        hash) AND the per-doc shingle count in ONE groupBy — sizes ride
        the same shuffle as the signature build instead of a second
@@ -295,13 +293,10 @@ def minhash_lsh_pairs(
        there, drop the hint at this site and Spark shuffles the semi
        join instead — same semantics, still pruned.
     """
-    sh = shingle_rows(df, id_col, text_col, n)
-    if cache_shingles:
-        # The result is lazy, so this function can't unpersist after
-        # materialization; the session registry bounds accumulation
-        # (see _persist_via_registry). Callers wanting full manual
-        # control pass cache_shingles=False.
-        sh = _persist_via_registry(sh)
+    # The result is lazy, so this function can't unpersist after
+    # materialization; the session registry bounds accumulation (see
+    # _persist_via_registry).
+    sh = _persist_via_registry(shingle_rows(df, id_col, text_col, n))
     hashed = sh.select("id", F.pmod(F.xxhash64("shingle"), F.lit(_P)).alias("h"))
     # signatures + sizes in one aggregate (shared _signature_agg helper;
     # shingle rows are distinct per doc, so the per-group count IS
@@ -311,21 +306,6 @@ def minhash_lsh_pairs(
     idx = _signature_agg(hashed, num_hashes)
     sizes = idx.select("id", "sz")
     banded = _index_band_buckets(idx, num_hashes, bands)
-    if max_bucket_size is not None:
-        # mega-bucket guard (same policy + shape as hamming_pairs): a
-        # band bucket holding k docs yields O(k^2) candidates — mass
-        # duplication that verification would only confirm pair by
-        # pair; over-full buckets drop wholesale, recall holds for
-        # pairs sharing any surviving band
-        if max_bucket_size < 1:
-            raise ValueError(f"max_bucket_size must be ≥ 1, got {max_bucket_size}")
-        ok_b = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .select("band", "bucket")
-        )
-        banded = banded.join(ok_b, ["band", "bucket"], "left_semi")
     a = banded.alias("a")
     b = banded.alias("b")
     candidates = (
@@ -841,7 +821,6 @@ def hamming_pairs(
     hash_col: str = "simhash",
     max_hamming: int = 3,
     blocks: int = 4,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs among 64-bit fingerprints by hamming distance,
     block-LSH (pigeonhole) style — the shared candidate machinery behind
@@ -851,18 +830,7 @@ def hamming_pairs(
     and we cut into ``blocks`` ≥ max_hamming+1 equal blocks, at least
     one block matches exactly → candidates join on (block_idx,
     block_value), then verify popcount of XOR. Avoids the O(n²) cross
-    join; the shuffle carries blocks·n rows keyed by block value.
-
-    ``max_bucket_size`` is the mega-bucket guard for degenerate prints
-    (blank images, empty documents, boilerplate hashing to one value):
-    a single (block, value) bucket holding k rows contributes O(k²)
-    candidate pairs, so one degenerate value can turn the banded join
-    quadratic. When set, buckets larger than the bound are EXCLUDED
-    (one extra groupBy on the same key the join shuffles on) — the
-    pigeonhole recall guarantee then holds only for pairs with at least
-    one matching block in a surviving bucket; content frequent enough
-    to blow the bound is near-identical boilerplate a curation pipeline
-    drops wholesale anyway (the Dolma/RefinedWeb policy)."""
+    join; the shuffle carries blocks·n rows keyed by block value."""
     if 64 % blocks != 0:
         raise ValueError(f"blocks must divide 64, got {blocks}")
     if blocks < max_hamming + 1:
@@ -895,16 +863,6 @@ def hamming_pairs(
     # once — the checkpoint is bounded at blocks·n 16-byte rows (lazy:
     # materializes inside the join's first job).
     blocked = blocked.localCheckpoint(eager=False)
-    if max_bucket_size is not None:
-        if max_bucket_size < 1:
-            raise ValueError(f"max_bucket_size must be ≥ 1, got {max_bucket_size}")
-        ok_buckets = (
-            blocked.groupBy("blk", "blkval")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .select("blk", "blkval")
-        )
-        blocked = blocked.join(ok_buckets, ["blk", "blkval"], "left_semi")
     a = blocked.alias("a")
     b = blocked.alias("b")
     return (
@@ -1490,6 +1448,9 @@ def _index_band_buckets(index: DataFrame, num_hashes: int, bands: int) -> DataFr
 # object headers). 48 B/key is deliberately conservative — under-estimating
 # would pick broadcast past the point where the driver/executors pay for it.
 _BCAST_BYTES_PER_KEY = 48
+# The increment's (band, bucket) key set broadcasts while its estimate
+# stays under this cap; past it the Bloom bitmap takes over.
+_BCAST_CAP_BYTES = 50 * 1024 * 1024
 # Bloom sizing: ~10 bits/key keeps FP < 1% (k=7 Kirsch–Mitzenmacher);
 # clamped so the task-closure bitmap stays between 128 KB and 16 MB — the
 # artifact's whole point is that it never grows with the key count.
@@ -1509,13 +1470,12 @@ def _bloom_m_bits_for(est_keys: int) -> int:
     return m_bits
 
 
-def choose_prefilter(
-    new_index: DataFrame,
-    bands: int = 8,
-    network_shuffle: bool | None = None,
-    broadcast_cap_bytes: int = 50 * 1024 * 1024,
-    n_new_docs: int | None = None,
-) -> dict:
+def _network_priced(df: DataFrame) -> bool:
+    """Whether shuffle is network-priced: any master but ``local[...]``."""
+    return not (df.sparkSession.sparkContext.master or "").startswith("local")
+
+
+def choose_prefilter(new_index: DataFrame, bands: int = 8) -> dict:
     """Pick the history prefilter for :func:`incremental_minhash_pairs` —
     the executable form of the regime rule SCALE.md measured (r12):
 
@@ -1530,26 +1490,19 @@ def choose_prefilter(
       (FP < 1%), clamped to [2^20, 2^27] bits so the closure artifact
       stays 128 KB–16 MB at ANY key count.
 
-    ``network_shuffle`` defaults to inference from the session master:
-    ``local[...]`` masters are local-cheap, anything else is treated as
-    network-priced. ``n_new_docs`` overrides the increment row count
-    (skips the count job — pass it when the caller already knows).
-    Returns ``{"kind": 'none'|'broadcast'|'bloom', "bloom_m_bits":
-    int|None, "est_keys": int|None}`` — the dict feeds straight into
-    :func:`incremental_minhash_pairs`'s explicit knobs.
+    ``local[...]`` masters are local-cheap and decide without touching
+    the data; any other master is network-priced and costs one
+    ``count()`` job on the increment. Returns ``{"kind":
+    'none'|'broadcast'|'bloom', "bloom_m_bits": int|None, "est_keys":
+    int|None}``.
     """
-    if network_shuffle is None:
-        master = new_index.sparkSession.sparkContext.master or ""
-        network_shuffle = not master.startswith("local")
-    if not network_shuffle:
+    if not _network_priced(new_index):
         return {"kind": "none", "bloom_m_bits": None, "est_keys": None}
-    if n_new_docs is None:
-        n_new_docs = new_index.count()
     # keys ≈ docs · bands: each doc lands in one bucket per band; distinct
     # collapses shared buckets, so this over-estimates — the safe direction
     # (never picks broadcast for a set that turns out bigger).
-    est_keys = max(1, n_new_docs * bands)
-    if est_keys * _BCAST_BYTES_PER_KEY <= broadcast_cap_bytes:
+    est_keys = max(1, new_index.count() * bands)
+    if est_keys * _BCAST_BYTES_PER_KEY <= _BCAST_CAP_BYTES:
         return {"kind": "broadcast", "bloom_m_bits": None, "est_keys": est_keys}
     return {"kind": "bloom", "bloom_m_bits": _bloom_m_bits_for(est_keys), "est_keys": est_keys}
 
@@ -1560,11 +1513,7 @@ def incremental_minhash_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    bloom_prefilter_m_bits: int | None = None,
-    broadcast_prefilter: bool = False,
     prefilter: str = "auto",
-    n_new_docs: int | None = None,
-    network_shuffle: bool | None = None,
 ) -> DataFrame:
     """Near-dup pairs for a NEW increment against itself and against the
     historical index → ``(id_new, id_other, source 'history'|'new',
@@ -1579,88 +1528,48 @@ def incremental_minhash_pairs(
     shuffle keyed by (band, bucket), never all-pairs); the estimator
     runs on candidate pairs only.
 
-    ``bloom_prefilter_m_bits`` (r12, VERDICT #4): when set, a Bloom
-    filter (``sketches.bloom_filter_table``) is built over the NEW
-    increment's (band, bucket) keys and probed against the HISTORY
-    bucket table at its scan — at 100 TB the history index dwarfs every
-    increment, and without the prefilter all n_history·bands bucket
-    rows shuffle into the candidate join even though almost none
-    collide with the increment. Output is IDENTICAL by construction:
-    the filter has no false negatives (every colliding history row
-    survives), and a false positive only lets a row into the shuffle
-    where the exact (band, bucket) equi-join discards it (pinned in
-    ``test_incremental_bloom_prefilter_output_identical``). Size it at
-    ~10 bits per new-side key (keys ≈ n_new_docs · bands): the default
-    2^26 = an 8 MB task-closure bitmap, FP < 1% up to ~6.7 M keys.
+    ``prefilter`` picks how the HISTORY bucket table is pruned before
+    the candidate shuffle — at 100 TB the history index dwarfs every
+    increment, and unpruned, all n_history·bands bucket rows shuffle
+    into the candidate join though almost none collide with the
+    increment. Every choice is output-identical:
 
-    ``broadcast_prefilter`` (r12) is the EXACT sibling: left-semi join
-    the history bucket table against the broadcast distinct new-side
-    keys — zero false positives, plans as a BroadcastHashJoin LeftSemi,
-    all JVM. Prefer it while the increment's distinct (band, bucket)
-    set broadcasts comfortably (~≤50 MB); switch to the Bloom bitmap
-    when the increment outgrows that (the bitmap stays 8 MB at ANY key
-    count). Mutually exclusive with ``bloom_prefilter_m_bits``.
-
-    ``prefilter`` (r13) is the DEFAULT policy path: ``'auto'`` resolves
-    via :func:`choose_prefilter` (no prefilter on local-cheap shuffle,
-    broadcast under the ~50 MB key-set cap, Bloom above), so callers
-    who set neither explicit knob get the measured decision rule
-    instead of the unfiltered path unconditionally. ``'none'`` forces
-    unfiltered; ``'broadcast'``/``'bloom'`` force those paths — a
-    forced ``'bloom'`` is sized by the SAME ~10-bits/key clamped rule
-    the policy uses (r14; no hardcoded bitmap). The two explicit knobs
-    override ``prefilter`` when set (back-compat).
-
-    Cost note (r13 ADVICE): on a network-priced master, ``'auto'`` (and
-    forced ``'bloom'``) must size against the increment's row count —
-    ONE extra ``count()`` job per call unless the caller passes
-    ``n_new_docs`` (do so when the increment size is already known —
-    e.g. from the ingest batch that produced it). ``network_shuffle``
-    overrides the master-type inference the same way it does on
-    :func:`choose_prefilter` (local masters short-circuit to 'none',
-    which also skips the count)."""
-    if bloom_prefilter_m_bits is not None and broadcast_prefilter:
-        raise ValueError(
-            "choose ONE history prefilter: bloom_prefilter_m_bits or broadcast_prefilter"
-        )
-    if bloom_prefilter_m_bits is None and not broadcast_prefilter:
-        if prefilter == "auto":
-            policy = choose_prefilter(
-                new_index,
-                bands=bands,
-                network_shuffle=network_shuffle,
-                n_new_docs=n_new_docs,
-            )
-        elif prefilter in ("none", "broadcast"):
-            policy = {"kind": prefilter, "bloom_m_bits": None}
-        elif prefilter == "bloom":
-            if n_new_docs is None:
-                n_new_docs = new_index.count()
-            policy = {
-                "kind": "bloom",
-                "bloom_m_bits": _bloom_m_bits_for(max(1, n_new_docs * bands)),
-            }
-        else:
-            raise ValueError(
-                f"prefilter must be auto|none|broadcast|bloom, got {prefilter!r}"
-            )
-        if policy["kind"] == "broadcast":
-            broadcast_prefilter = True
-        elif policy["kind"] == "bloom":
-            bloom_prefilter_m_bits = policy["bloom_m_bits"]
+    - ``'auto'`` (default) resolves via :func:`choose_prefilter`.
+    - ``'none'`` shuffles the history unpruned.
+    - ``'broadcast'`` left-semi joins the history buckets against the
+      broadcast distinct new-side keys — exact, all JVM, a
+      BroadcastHashJoin LeftSemi in the plan.
+    - ``'bloom'`` builds a Bloom filter (``sketches.bloom_filter_table``)
+      over the new side's keys and probes the history at its scan. No
+      false negatives, and a false positive only feeds a row into the
+      exact (band, bucket) equi-join that discards it. The bitmap is
+      sized by :func:`_bloom_m_bits_for` (~10 bits per key, keys ≈
+      increment rows · bands), which costs one ``count()`` job.
+    """
+    if prefilter == "auto":
+        policy = choose_prefilter(new_index, bands)
+    elif prefilter in ("none", "broadcast"):
+        policy = {"kind": prefilter}
+    elif prefilter == "bloom":
+        policy = {
+            "kind": "bloom",
+            "bloom_m_bits": _bloom_m_bits_for(max(1, new_index.count() * bands)),
+        }
+    else:
+        raise ValueError(f"prefilter must be auto|none|broadcast|bloom, got {prefilter!r}")
     nb = _index_band_buckets(new_index, num_hashes, bands)
     hb = _index_band_buckets(history_index, num_hashes, bands)
-    if bloom_prefilter_m_bits is not None:
+    if policy["kind"] == "bloom":
         from distributed_computing_platform_mapreduce_spark.operators import sketches
 
         bb_key = F.xxhash64("band", "bucket")
         bloom = sketches.bloom_filter_table(
-            nb.select(bb_key.alias("bb_key")), "bb_key", m_bits=bloom_prefilter_m_bits
+            nb.select(bb_key.alias("bb_key")), "bb_key", m_bits=policy["bloom_m_bits"]
         )
         hb = sketches.bloom_probe(
             hb.withColumn("__bb_key", bb_key), "__bb_key", bloom
         ).drop("__bb_key")
-    elif broadcast_prefilter:
+    elif policy["kind"] == "broadcast":
         hb = hb.join(
             F.broadcast(nb.select("band", "bucket").distinct()),
             ["band", "bucket"],
@@ -1734,11 +1643,7 @@ def incremental_dedup(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    bloom_prefilter_m_bits: int | None = None,
-    broadcast_prefilter: bool = False,
     prefilter: str = "auto",
-    n_new_docs: int | None = None,
-    network_shuffle: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The production increment loop: ``(survivors, updated_index)``.
 
@@ -1747,14 +1652,9 @@ def incremental_dedup(
     policy of `dedup_exact`/`dedup_survivors`). The updated index =
     history ∪ survivors' signatures, ready to be written back for the
     next increment — historical text is never read, and the index grows
-    only by the deduped increment. ``bloom_prefilter_m_bits`` prunes
-    the history bucket table at its scan before the candidate shuffle
-    (see :func:`incremental_minhash_pairs`) — output-identical, history
-    side never fully shuffled. On network-priced masters the default
-    ``prefilter='auto'`` sizes itself against the increment row count —
-    pass ``n_new_docs`` when the batch size is already known to skip
-    the one extra ``count()`` job that sizing otherwise costs (r13
-    ADVICE; local masters resolve to 'none' and never pay it)."""
+    only by the deduped increment. ``prefilter`` prunes the history
+    bucket table before the candidate shuffle (see
+    :func:`incremental_minhash_pairs`) — output-identical."""
     survivors, surviving_index = incremental_dedup_delta(
         new_df,
         history_index,
@@ -1764,11 +1664,7 @@ def incremental_dedup(
         num_hashes=num_hashes,
         bands=bands,
         threshold=threshold,
-        bloom_prefilter_m_bits=bloom_prefilter_m_bits,
-        broadcast_prefilter=broadcast_prefilter,
         prefilter=prefilter,
-        n_new_docs=n_new_docs,
-        network_shuffle=network_shuffle,
     )
     return survivors, history_index.unionAll(surviving_index)
 
@@ -1782,11 +1678,7 @@ def incremental_dedup_delta(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    bloom_prefilter_m_bits: int | None = None,
-    broadcast_prefilter: bool = False,
     prefilter: str = "auto",
-    n_new_docs: int | None = None,
-    network_shuffle: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`incremental_dedup`'s core, returning ``(survivors,
     surviving_index)`` — the increment's own surviving signatures (the
@@ -1800,12 +1692,7 @@ def incremental_dedup_delta(
         eager=False
     )
     pairs = incremental_minhash_pairs(
-        new_index, history_index, num_hashes, bands, threshold,
-        bloom_prefilter_m_bits=bloom_prefilter_m_bits,
-        broadcast_prefilter=broadcast_prefilter,
-        prefilter=prefilter,
-        n_new_docs=n_new_docs,
-        network_shuffle=network_shuffle,
+        new_index, history_index, num_hashes, bands, threshold, prefilter=prefilter
     )
     # any history match kills the new doc; a new-new match kills the
     # HIGHER id (pairs are ordered id_new < id_other for source='new',
@@ -1827,31 +1714,3 @@ def incremental_dedup_delta(
     )
     surviving_index = new_index.join(dead, "id", "left_anti")
     return survivors, surviving_index
-
-
-def bucket_stats(df: DataFrame, key_cols: list[str]) -> dict:
-    """Candidate-cost advisor for any banded/bucketed join: one
-    aggregate over the bucket keys → ``{n_rows, n_buckets,
-    max_bucket, est_candidate_pairs}`` where est_candidate_pairs =
-    Σ n·(n−1)/2 over buckets — the EXACT pair count the self-join would
-    emit. Run it on the blocked/banded table BEFORE ``hamming_pairs`` /
-    ``minhash_lsh_pairs`` to size ``max_bucket_size`` (or decide the
-    corpus is mass-duplicated) for the cost of one groupBy instead of
-    discovering the blowup mid-join."""
-    row = (
-        df.groupBy(*key_cols)
-        .agg(F.count("*").alias("__n"))
-        .agg(
-            F.sum("__n").alias("rows"),
-            F.count("*").alias("buckets"),
-            F.max("__n").alias("mx"),
-            F.sum(F.col("__n") * (F.col("__n") - 1) / 2).alias("pairs"),
-        )
-        .collect()[0]
-    )
-    return {
-        "n_rows": int(row["rows"] or 0),
-        "n_buckets": int(row["buckets"] or 0),
-        "max_bucket": int(row["mx"] or 0),
-        "est_candidate_pairs": int(row["pairs"] or 0),
-    }

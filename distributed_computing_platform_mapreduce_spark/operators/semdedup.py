@@ -23,8 +23,8 @@ per-cell work is O(|cell|²·dim) FLOPs but O(block·|cell|) memory via
 the row-block loop, and the emitted pair set is threshold-pruned. The
 quadratic-per-cell cost is the documented SemDeDup contract — callers
 size ``n_clusters ∝ corpus/expected_cell`` (the paper runs 50k cells
-over 5 B docs). ``cell_stats`` is the pre-flight advisor (the
-``bucket_stats`` pattern); ``max_cell_rows`` fails loudly instead of
+over 5 B docs). ``cell_stats`` is the pre-flight advisor (one groupBy
+pricing Σ n·(n−1)/2 pairs); ``max_cell_rows`` fails loudly instead of
 letting one mega-cell OOM an executor.
 
 Survivor policies: ``min_id`` (the CC family's default, integer-exact
@@ -82,7 +82,7 @@ def cell_stats(assigned: DataFrame, cell_col: str = "cell") -> DataFrame:
     count and the pair count the verify stage would compute —
     ``(cell, n, n_pairs)``, ordered worst-first. Sum of ``n_pairs`` is
     the total GEMM work; a dominant cell says raise ``n_clusters``
-    before running (the ``bucket_stats`` convention)."""
+    before running."""
     return (
         assigned.groupBy(cell_col)
         .agg(F.count("*").alias("n"))

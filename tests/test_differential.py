@@ -658,9 +658,10 @@ def test_bpe_incremental_trainer_matches_python(corpus):
 @settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(_corpus)
 def test_bpe_train_and_encode_match_python(spark, corpus):
-    """Distributed BPE (train on the word-count table, Arrow-batched
-    merge rewrite, greedy encode) vs the straight-line Python trainer
-    on generated corpora — unicode chars, repeated words, empty lines."""
+    """Distributed BPE (word-count table on the cluster, driver-local
+    incremental trainer, mapInPandas greedy encode) vs the
+    straight-line Python trainer on generated corpora — unicode chars,
+    repeated words, empty lines."""
     from distributed_computing_platform_mapreduce_spark.operators import bpe
     from tests.test_operators import _twin_bpe_train
 
@@ -695,18 +696,18 @@ def test_hamming_pairs_match_bruteforce(spark, prints, max_hamming, blocks):
     brute-force all-pairs popcount on arbitrary 64-bit prints: exactly
     the pairs within max_hamming, each with the exact distance —
     pigeonhole recall is a theorem (blocks ≥ max_hamming+1), this pins
-    the implementation to it."""
+    the implementation to it. Each pair comes back as exactly ONE row,
+    however many blocks it matches in."""
     if blocks < max_hamming + 1:
         blocks = 8 if max_hamming < 8 else 16
     df = spark.createDataFrame(
         [(i, h) for i, h in enumerate(prints)], "id long, h long"
     )
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dedup.hamming_pairs(
-            df, id_col="id", hash_col="h", max_hamming=max_hamming, blocks=blocks
-        ).collect()
-    }
+    rows = dedup.hamming_pairs(
+        df, id_col="id", hash_col="h", max_hamming=max_hamming, blocks=blocks
+    ).collect()
+    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in rows}
+    assert len(rows) == len(got)
     want = {}
     for i, a in enumerate(prints):
         for j in range(i + 1, len(prints)):

@@ -96,9 +96,7 @@ def test_minhash_lsh_dedup_survives_task_failures(spark, sf_dir, tmp_path):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").repartition(8)
 
     def pairs(d):
-        return _rows(
-            dedup.minhash_lsh_pairs(d, "doc_id", "text", threshold=0.5, cache_shingles=False)
-        )
+        return _rows(dedup.minhash_lsh_pairs(d, "doc_id", "text", threshold=0.5))
 
     clean = pairs(docs)
     assert clean, "fixture expectation: sf corpus has near-dup pairs"

@@ -3338,16 +3338,10 @@ def test_incremental_dedup_against_history_index(spark):
     assert s4.count() == 0
 
 
-def test_incremental_bloom_prefilter_output_identical(spark, sf_dir):
-    """r12 (VERDICT #4): composing the Bloom membership sketch as the
-    history-side prefilter in incremental dedup must be OUTPUT-
-    IDENTICAL to the unfiltered path — no false negatives means every
-    colliding history bucket row survives the prefilter, and a false
-    positive only feeds a row into the (band, bucket) equi-join that
-    discards it. Checked on the real sf documents corpus (dup-rich:
-    the halves share near-dups both ways) and at a deliberately
-    UNDERSIZED m_bits where false positives are guaranteed, so
-    equality is exercised under both clean and saturated filters."""
+def _prefilter_drill(spark, sf_dir):
+    """The sf documents split into a history index (even ids) and an
+    increment (odd ids), returned as ``(increment, history index,
+    increment index)``. The halves share near-dups both ways."""
     from distributed_computing_platform_mapreduce_spark.operators import dedup as dd
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3355,226 +3349,167 @@ def test_incremental_bloom_prefilter_output_identical(spark, sf_dir):
         docs.filter(F.pmod("doc_id", F.lit(2)) == 0), "doc_id", "text"
     ).localCheckpoint()
     new = docs.filter(F.pmod("doc_id", F.lit(2)) == 1)
+    n_idx = dd.minhash_index(new, "doc_id", "text").localCheckpoint()
+    return new, hist, n_idx
 
-    def run(m_bits):
-        survivors, updated = dd.incremental_dedup(
-            new, hist, threshold=0.5, bloom_prefilter_m_bits=m_bits
-        )
+
+def _assert_prefilters_match_unfiltered(drill, monkeypatch, cases):
+    """The prefilter equality loop. Each case is ``(prefilter, dedup
+    attributes patched, resolved kind, Bloom width)``: under the patches,
+    `incremental_minhash_pairs` pairs and `incremental_dedup` survivors
+    and index must equal the ``prefilter='none'`` output, the plan must
+    hold the ``BroadcastHashJoin LeftSemi`` semi-join exactly when the
+    kind is broadcast, and `bloom_filter_table` must be handed exactly
+    the given width (and not run at all when the width is None)."""
+    from distributed_computing_platform_mapreduce_spark.operators import dedup as dd
+    from distributed_computing_platform_mapreduce_spark.operators import sketches
+
+    new, hist, n_idx = drill
+
+    def pairs(prefilter):
+        return dd.incremental_minhash_pairs(n_idx, hist, threshold=0.5, prefilter=prefilter)
+
+    def outputs(prefilter):
+        survivors, updated = dd.incremental_dedup(new, hist, threshold=0.5, prefilter=prefilter)
         return (
+            sorted(tuple(r) for r in pairs(prefilter).collect()),
             sorted(r["doc_id"] for r in survivors.collect()),
             sorted((r["id"], tuple(r["signature"])) for r in updated.collect()),
         )
 
-    base_s, base_u = run(None)
-    assert base_s and len(base_s) < new.count()  # the drill actually dedups
-    for m_bits in (1 << 20, 64):  # well-sized, and saturated (FP ≈ 1)
-        got_s, got_u = run(m_bits)
-        assert got_s == base_s, f"survivor drift at m_bits={m_bits}"
-        assert got_u == base_u, f"index drift at m_bits={m_bits}"
+    want = outputs("none")
+    assert want[0] and want[1] and len(want[1]) < new.count()  # the drill dedups
 
-    # the exact broadcast sibling too (r12): semi-join prefilter,
-    # output identical, and the two prefilters refuse to stack
-    survivors_bc, updated_bc = dd.incremental_dedup(
-        new, hist, threshold=0.5, broadcast_prefilter=True
-    )
-    assert sorted(r["doc_id"] for r in survivors_bc.collect()) == base_s
-    assert (
-        sorted((r["id"], tuple(r["signature"])) for r in updated_bc.collect())
-        == base_u
-    )
-    with pytest.raises(ValueError, match="ONE history prefilter"):
-        dd.incremental_dedup(
-            new, hist, bloom_prefilter_m_bits=64, broadcast_prefilter=True
-        )
+    bloom_bits = []
+    real_bloom = sketches.bloom_filter_table
 
-    # pairs-level equality too (est_jaccard values ride through)
-    n_idx = dd.minhash_index(new, "doc_id", "text").localCheckpoint()
-    want = sorted(
-        tuple(r)
-        for r in dd.incremental_minhash_pairs(n_idx, hist, threshold=0.5).collect()
-    )
-    got = sorted(
-        tuple(r)
-        for r in dd.incremental_minhash_pairs(
-            n_idx, hist, threshold=0.5, bloom_prefilter_m_bits=1 << 20
-        ).collect()
-    )
-    assert got == want and len(want) > 0
+    def spy(df, col, m_bits, **kw):
+        bloom_bits.append(m_bits)
+        return real_bloom(df, col, m_bits=m_bits, **kw)
+
+    monkeypatch.setattr(sketches, "bloom_filter_table", spy)
+    for prefilter, patches, kind, m_bits in cases:
+        label = f"prefilter={prefilter} patched={sorted(patches)}"
+        bloom_bits.clear()
+        with monkeypatch.context() as m:
+            for name, value in patches.items():
+                m.setattr(dd, name, value)
+            plan_df = pairs(prefilter)
+            plan = plan_df._sc._jvm.PythonSQLUtils.explainString(
+                plan_df._jdf.queryExecution(), "formatted"
+            )
+            got = outputs(prefilter)
+        assert got == want, f"{label} drifted from the unfiltered output"
+        assert ("BroadcastHashJoin" in plan and "LeftSemi" in plan) == (
+            kind == "broadcast"
+        ), label
+        assert set(bloom_bits) == ({m_bits} if m_bits else set()), label
 
 
-def test_choose_prefilter_policy_thresholds(spark, sf_dir):
-    """r13 (VERDICT #4): the prefilter decision rule SCALE.md measured is
-    CODE, not prose — `choose_prefilter` picks none on local-cheap
-    shuffle, broadcast while the increment's (band,bucket) key set fits
-    the ~50 MB broadcast cap, and a size-clamped Bloom bitmap above it;
-    and `prefilter='auto'` is the incremental-dedup default path."""
+def test_incremental_bloom_prefilter_output_identical(spark, sf_dir, monkeypatch):
+    """Every history prefilter is OUTPUT-IDENTICAL to the unfiltered
+    path (``prefilter='none'``), on both `incremental_minhash_pairs` and
+    `incremental_dedup`: no false negatives means every colliding
+    history bucket row survives, and a false positive only feeds a row
+    into the (band, bucket) equi-join that discards it. Runs 'auto' on
+    the local master (no prefilter), 'broadcast', and 'bloom' with the
+    bitmap shrunk to 64 bits, where false positives are certain; an
+    unknown prefilter string raises."""
     from distributed_computing_platform_mapreduce_spark.operators import dedup as dd
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    idx = dd.minhash_index(docs.limit(10), "doc_id", "text").localCheckpoint()
-
-    # local master ⇒ shuffle is local-cheap ⇒ no prefilter, and the
-    # decision must not run a count job (n_new_docs stays unneeded)
-    auto = dd.choose_prefilter(idx)
-    assert auto == {"kind": "none", "bloom_m_bits": None, "est_keys": None}
-
-    # network-priced shuffle: the broadcast cap binds at
-    # 50 MB / (48 B/key · 8 bands) ≈ 136k docs — pin both sides of it
-    cap_docs = (50 * 1024 * 1024) // (48 * 8)
-    under = dd.choose_prefilter(idx, network_shuffle=True, n_new_docs=cap_docs)
-    assert under["kind"] == "broadcast" and under["est_keys"] == cap_docs * 8
-    over = dd.choose_prefilter(idx, network_shuffle=True, n_new_docs=cap_docs + 1)
-    assert over["kind"] == "bloom"
-
-    # bloom sizing: ~10 bits/key, power-of-two, clamped to [2^20, 2^27]
-    small = dd.choose_prefilter(idx, network_shuffle=True, n_new_docs=cap_docs + 1)
-    assert small["bloom_m_bits"] >= min(2**27, 10 * (cap_docs + 1) * 8)
-    assert small["bloom_m_bits"] & (small["bloom_m_bits"] - 1) == 0
-    huge = dd.choose_prefilter(idx, network_shuffle=True, n_new_docs=1_000_000_000)
-    assert huge["bloom_m_bits"] == 2**27  # bitmap never outgrows 16 MB
-    tiny = dd.choose_prefilter(
-        idx, network_shuffle=True, n_new_docs=1, broadcast_cap_bytes=0
+    drill = _prefilter_drill(spark, sf_dir)
+    saturated = {"_bloom_m_bits_for": lambda keys: 64}
+    _assert_prefilters_match_unfiltered(
+        drill,
+        monkeypatch,
+        [
+            ("auto", {}, "none", None),
+            ("broadcast", {}, "broadcast", None),
+            ("bloom", saturated, "bloom", 64),
+        ],
     )
-    assert tiny["kind"] == "bloom" and tiny["bloom_m_bits"] == 2**20
-
-    # the auto default is live in the operator: on this local session it
-    # resolves to the unfiltered path and equals it exactly; the forced
-    # string forms ('broadcast'/'bloom') remain output-identical
-    hist = dd.minhash_index(
-        docs.filter(F.pmod("doc_id", F.lit(2)) == 0), "doc_id", "text"
-    ).localCheckpoint()
-    n_idx = dd.minhash_index(
-        docs.filter(F.pmod("doc_id", F.lit(2)) == 1), "doc_id", "text"
-    ).localCheckpoint()
-    want = sorted(
-        tuple(r)
-        for r in dd.incremental_minhash_pairs(
-            n_idx, hist, threshold=0.5, prefilter="none"
-        ).collect()
-    )
-    assert want
-    for mode in ("auto", "broadcast", "bloom"):
-        got = sorted(
-            tuple(r)
-            for r in dd.incremental_minhash_pairs(
-                n_idx, hist, threshold=0.5, prefilter=mode
-            ).collect()
-        )
-        assert got == want, f"prefilter={mode} drifted from unfiltered output"
+    _, hist, n_idx = drill
     with pytest.raises(ValueError, match="auto|none|broadcast|bloom"):
-        dd.incremental_minhash_pairs(n_idx, hist, prefilter="nope").collect()
+        dd.incremental_minhash_pairs(n_idx, hist, prefilter="nope")
 
 
 def test_forced_bloom_sizing_uses_policy_rule(spark, sf_dir, monkeypatch):
-    """r13 VERDICT #4: `prefilter='bloom'` sizes its bitmap through the
-    SAME ~10-bits/key clamped rule `choose_prefilter` uses — not a
-    hardcoded 2^26 — so a small forced-bloom increment pays 128 KB, a
-    huge one escalates to the 2^27 clamp, and the two paths can never
-    drift apart."""
+    """`prefilter='bloom'` sizes its bitmap through the SAME ~10-bits/key
+    clamped rule `choose_prefilter` uses (`_bloom_m_bits_for` over the
+    increment's 8-band key count), not a hardcoded width, and stays
+    output-identical to the unfiltered path."""
     from distributed_computing_platform_mapreduce_spark.operators import dedup as dd
-    from distributed_computing_platform_mapreduce_spark.operators import sketches
 
-    # the sizing helper itself: clamps and 10-bits/key growth
+    # the sizing rule: clamps and 10-bits/key growth to the next power of two
     assert dd._bloom_m_bits_for(1) == 2**20
     assert dd._bloom_m_bits_for(10**12) == 2**27
-    assert dd._bloom_m_bits_for(2**20) == 2**24  # 10 bits/key → next pow2
-    # policy and helper agree at every probed size
-    idx_sizes = (1, 10_000, 300_000, 10**9)
-    for n in idx_sizes:
-        pol = dd.choose_prefilter(_FakeIdx(), network_shuffle=True, n_new_docs=n)
-        if pol["kind"] == "bloom":
-            assert pol["bloom_m_bits"] == dd._bloom_m_bits_for(n * 8)
+    assert dd._bloom_m_bits_for(2**20) == 2**24
 
-    # the forced path routes through the helper: capture the m_bits the
-    # operator hands to bloom_filter_table
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    hist = dd.minhash_index(
-        docs.filter(F.pmod("doc_id", F.lit(2)) == 0), "doc_id", "text"
-    ).localCheckpoint()
-    n_idx = dd.minhash_index(docs.limit(12), "doc_id", "text").localCheckpoint()
-    seen = {}
-    real = sketches.bloom_filter_table
-
-    def spy(df, col, m_bits, **kw):
-        seen["m_bits"] = m_bits
-        return real(df, col, m_bits=m_bits, **kw)
-
-    monkeypatch.setattr(sketches, "bloom_filter_table", spy)
-    # small increment, size supplied → policy sizes 12·8=96 keys → 2^20 floor
-    dd.incremental_minhash_pairs(
-        n_idx, hist, threshold=0.5, prefilter="bloom", n_new_docs=12
-    ).collect()
-    assert seen["m_bits"] == 2**20
-    # huge declared increment → clamp at 2^27, never the old 2^26 constant
-    dd.incremental_minhash_pairs(
-        n_idx, hist, threshold=0.5, prefilter="bloom", n_new_docs=10**9
-    ).collect()
-    assert seen["m_bits"] == 2**27
+    drill = _prefilter_drill(spark, sf_dir)
+    rule_bits = dd._bloom_m_bits_for(drill[2].count() * 8)
+    _assert_prefilters_match_unfiltered(
+        drill, monkeypatch, [("bloom", {}, "bloom", rule_bits)]
+    )
 
 
-class _FakeIdx:
-    """choose_prefilter only touches the df when it must count or read
-    the master; with n_new_docs + network_shuffle supplied it touches
-    neither — this stub asserts that stays true (no silent count jobs)."""
-
-    @property
-    def sparkSession(self):  # pragma: no cover — reaching here is the failure
-        raise AssertionError("choose_prefilter touched the DataFrame unnecessarily")
-
-    def count(self):  # pragma: no cover
-        raise AssertionError("choose_prefilter ran a count() despite n_new_docs")
-
-
-def test_incremental_auto_prefilter_network_priced(spark, sf_dir):
-    """r13 VERDICT #8 (stretch): the 'auto' policy resolved ORGANICALLY
-    on a simulated network-priced master — `network_shuffle=True`
-    threads end-to-end through incremental_dedup, the chosen broadcast
-    semi-join is visible in the physical plan, and output is identical
-    to the unfiltered path. The bloom arm resolves too (big declared
-    increment) with identical output."""
+def test_incremental_auto_prefilter_network_priced(spark, sf_dir, monkeypatch):
+    """'auto' on a network-priced master (`_network_priced` patched true):
+    a small increment resolves to the broadcast semi-join, visible in the
+    physical plan, and past the broadcast cap (patched to 0) to the
+    rule-sized Bloom bitmap; both are output-identical to the unfiltered
+    path on `incremental_minhash_pairs` and `incremental_dedup`."""
     from distributed_computing_platform_mapreduce_spark.operators import dedup as dd
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    hist = dd.minhash_index(
-        docs.filter(F.pmod("doc_id", F.lit(2)) == 0), "doc_id", "text"
-    ).localCheckpoint()
-    new = docs.filter(F.pmod("doc_id", F.lit(2)) == 1)
+    drill = _prefilter_drill(spark, sf_dir)
+    rule_bits = dd._bloom_m_bits_for(drill[2].count() * 8)
+    network = {"_network_priced": lambda df: True}
+    _assert_prefilters_match_unfiltered(
+        drill,
+        monkeypatch,
+        [
+            ("auto", network, "broadcast", None),
+            ("auto", {**network, "_BCAST_CAP_BYTES": 0}, "bloom", rule_bits),
+        ],
+    )
 
-    base_s, base_u = dd.incremental_dedup(new, hist, threshold=0.5, prefilter="none")
-    want_s = sorted(r["doc_id"] for r in base_s.collect())
-    want_u = sorted((r["id"], tuple(r["signature"])) for r in base_u.collect())
-    assert want_s
 
-    # small increment on a "network-priced" master → broadcast semi-join
-    got_s, got_u = dd.incremental_dedup(
-        new, hist, threshold=0.5, network_shuffle=True
-    )
-    assert sorted(r["doc_id"] for r in got_s.collect()) == want_s
-    assert sorted((r["id"], tuple(r["signature"])) for r in got_u.collect()) == want_u
+def test_choose_prefilter_policy_thresholds():
+    """The prefilter decision rule SCALE.md measured is CODE, not prose:
+    `choose_prefilter` picks none on a local master WITHOUT a count
+    job, and on a network-priced master the broadcast semi-join while
+    the increment's (band, bucket) key set fits the ~50 MB broadcast
+    cap, then a Bloom bitmap sized by `_bloom_m_bits_for` (~10
+    bits/key, power of two, clamped to [2^20, 2^27]). A stub index
+    stands in for the increment: it carries a master and a count."""
+    from types import SimpleNamespace
 
-    n_idx = dd.minhash_index(new, "doc_id", "text").localCheckpoint()
-    pairs_bc = dd.incremental_minhash_pairs(
-        n_idx, hist, threshold=0.5, network_shuffle=True
-    )
-    plan = pairs_bc._sc._jvm.PythonSQLUtils.explainString(
-        pairs_bc._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+    from distributed_computing_platform_mapreduce_spark.operators import dedup as dd
 
-    # big declared increment → the bloom arm, still output-identical
-    got_bloom = sorted(
-        tuple(r)
-        for r in dd.incremental_minhash_pairs(
-            n_idx, hist, threshold=0.5, network_shuffle=True, n_new_docs=10**9
-        ).collect()
-    )
-    want_pairs = sorted(
-        tuple(r)
-        for r in dd.incremental_minhash_pairs(
-            n_idx, hist, threshold=0.5, prefilter="none"
-        ).collect()
-    )
-    assert got_bloom == want_pairs and want_pairs
+    def index(master, n_docs=None):
+        def count():
+            assert n_docs is not None, "a local master must decide without a count job"
+            return n_docs
+
+        ctx = SimpleNamespace(master=master)
+        return SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=ctx), count=count)
+
+    none = {"kind": "none", "bloom_m_bits": None, "est_keys": None}
+    assert dd.choose_prefilter(index("local[4]")) == none
+
+    # the broadcast cap binds at 50 MB / (48 B/key · 8 bands) ≈ 136k docs
+    # — pin both sides of it
+    network = "spark://driver:7077"
+    cap_docs = (50 * 1024 * 1024) // (48 * 8)
+    assert dd.choose_prefilter(index(network, cap_docs)) == {
+        "kind": "broadcast", "bloom_m_bits": None, "est_keys": cap_docs * 8
+    }
+    for n in (cap_docs + 1, 10**9):
+        assert dd.choose_prefilter(index(network, n)) == {
+            "kind": "bloom", "bloom_m_bits": dd._bloom_m_bits_for(n * 8), "est_keys": n * 8
+        }
+    # the bitmap never outgrows 16 MB, and more bands mean more keys
+    assert dd.choose_prefilter(index(network, 10**9))["bloom_m_bits"] == 2**27
+    assert dd.choose_prefilter(index(network, cap_docs), bands=16)["kind"] == "bloom"
 
 
 def test_heavy_hitters_guarantee_and_exact_counts(spark):
@@ -4498,33 +4433,6 @@ def test_bpe_merges_txt_roundtrip(spark, tmp_path):
     assert a == b
 
 
-def test_hamming_pairs_mega_bucket_guard(spark):
-    """max_bucket_size excludes degenerate buckets (one print value held
-    by half the corpus would make the banded join quadratic) while
-    normal near-dup pairs keep full pigeonhole recall."""
-    from distributed_computing_platform_mapreduce_spark.operators import dedup as dd
-
-    rows = [(i, 0) for i in range(50)]  # 50 degenerate all-zero prints
-    rows += [(100, 0x0123456789ABCDE0), (101, 0x0123456789ABCDE1)]  # true pair, hamming 1
-    rows += [(200, -0x7123456789ABCDE0)]
-    df = spark.createDataFrame(rows, "id long, h long")
-
-    unguarded = dd.hamming_pairs(df, hash_col="h", max_hamming=3, blocks=8)
-    assert unguarded.filter("id_a < 100").count() == 50 * 49 // 2  # quadratic blowup
-
-    guarded = dd.hamming_pairs(
-        df, hash_col="h", max_hamming=3, blocks=8, max_bucket_size=10
-    )
-    got = {(r["id_a"], r["id_b"]) for r in guarded.collect()}
-    assert (100, 101) in got  # real pair survives every guard
-    assert not any(a < 100 and b < 100 for a, b in got)  # degenerates dropped
-    try:
-        dd.hamming_pairs(df, hash_col="h", max_bucket_size=0)
-        raise AssertionError("expected ValueError")
-    except ValueError:
-        pass
-
-
 def test_normalize_text_unicode_forms(spark):
     """Unicode normalization: NFC/NFD twins converge, full-width forms
     fold under NFKC, accents strip to base letters, whitespace
@@ -4800,29 +4708,6 @@ def test_validate_expectations_single_scan(spark, sf_dir):
     assert len(re.findall(r"Scan parquet", tree)) == 1
 
 
-def test_minhash_lsh_mega_bucket_guard(spark):
-    """max_bucket_size on the MinHash-LSH banding: a 40-way exact-dup
-    cluster (every band bucket holds all 40) drops wholesale, while an
-    ordinary near-dup pair in the same corpus keeps its pairs; default
-    behavior (None) is unchanged quadratic-verify."""
-    boiler = "the same boilerplate footer text repeated on every single page " * 3
-    rows = [(i, boiler) for i in range(40)]
-    rows += [
-        (100, "a genuinely unique document about spark plans and shuffles today ok"),
-        (101, "a genuinely unique document about spark plans and shuffles today yes"),
-        (200, "completely unrelated text mentioning nothing from the others at all"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    base = dedup.minhash_lsh_pairs(df, "doc_id", "text", threshold=0.5, cache_shingles=False)
-    assert base.filter("id_a < 100").count() == 40 * 39 // 2
-    guarded = dedup.minhash_lsh_pairs(
-        df, "doc_id", "text", threshold=0.5, cache_shingles=False, max_bucket_size=10
-    )
-    got = {(r["id_a"], r["id_b"]) for r in guarded.collect()}
-    assert (100, 101) in got
-    assert not any(a < 100 and b < 100 for a, b in got)
-
-
 def test_bloom_filter_table_probe_and_merge(spark):
     """r11 Bloom membership sketch: no false negatives EVER (every
     built key is admitted), measured-zero false positives at the
@@ -4973,29 +4858,6 @@ def test_mean_pool_embeddings_matches_numpy(spark):
         k=2,
     )
     assert out.count() == 4
-
-
-def test_bucket_stats_advisor(spark):
-    """bucket_stats reports the EXACT candidate-pair count of a bucketed
-    self-join — verified against hamming_pairs' unfiltered candidate
-    set on a degenerate + normal mix."""
-    from distributed_computing_platform_mapreduce_spark.operators import dedup as dd
-
-    rows = [(i, 0) for i in range(20)] + [(100 + i, 1 << i) for i in range(8)]
-    df = spark.createDataFrame(rows, "id long, h long")
-    blocked = df.selectExpr(
-        "id",
-        "stack(2, 0, CAST(shiftrightunsigned(h, 0) & 255 AS BIGINT), 1, CAST(shiftrightunsigned(h, 8) & 255 AS BIGINT)) AS (blk, blkval)",
-    )
-    stats = dd.bucket_stats(blocked, ["blk", "blkval"])
-    assert stats["n_rows"] == 2 * 28
-    assert stats["max_bucket"] >= 20
-    # exact pair arithmetic: sum n*(n-1)/2 over the bucket histogram
-    hist = blocked.groupBy("blk", "blkval").count().collect()
-    want_pairs = sum(r["count"] * (r["count"] - 1) // 2 for r in hist)
-    assert stats["est_candidate_pairs"] == want_pairs
-    empty = dd.bucket_stats(blocked.filter("id < 0"), ["blk", "blkval"])
-    assert empty == {"n_rows": 0, "n_buckets": 0, "max_bucket": 0, "est_candidate_pairs": 0}
 
 
 def test_dedup_exact_on_binary_payloads(spark):
