@@ -435,111 +435,45 @@ def connected_components(
     )
 
 
-def connected_components_twostar(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 20,
-    local_threshold: int = 200_000,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star —
-    the two-phase algorithm of Kiveris et al., "Connected Components in
-    MapReduce and Beyond" (ACM SoCC 2014). Same output contract as
-    ``connected_components``: (id, component = min id reachable).
+# connected_components_twostar solves at most this many canonical edges
+# (~MBs) on the driver; larger graphs run the star loop, capped in rounds.
+_LOCAL_CC_MAX_EDGES = 200_000
+_STAR_MAX_ROUNDS = 20
 
-    Why a second algorithm: min-label propagation converges in
-    O(diameter) rounds, and a 100 TB near-dup graph can contain long
-    chains (A~B~C~…) where diameter grows with cluster size. The star
-    operations contract chains aggressively — provably O(log² n) rounds,
-    O(log n) in practice — so a depth-64 chain that costs label
-    propagation 64 rounds finishes here in ~5. Each round is two
-    groupBy+join passes over the edge set (shuffles on node id), the
-    edge set only shrinks toward one star per component, and per-round
-    ``localCheckpoint`` keeps the plan O(1) exactly as in
-    ``connected_components``.
 
-    * large-star: every node points its LARGER neighbors at the min of
-      its closed neighborhood — long tails hook onto small ids without
-      growing the edge count;
-    * small-star: every node rewires its smaller-or-equal neighbors
-      (and itself) to that min — stars flatten.
+def connected_components_twostar(pairs: DataFrame) -> DataFrame:
+    """Connected components of an ``(id_a, id_b)`` pair graph, with the
+    output contract of ``connected_components``: (id, component = min id
+    reachable); self-loop-only ids get no label.
 
-    At the fixpoint every edge is (node, component-min). Convergence is
-    detected by an order-insensitive edge-set checksum (count + hash
-    sum in DECIMAL so ANSI mode can't overflow) as the per-round fast
-    path; a checksum match is then CONFIRMED by an exact symmetric
-    difference (one extra job, paid only at termination), so a hash
-    collision cannot end the loop on an unconverged edge set. Raises
-    like its sibling if ``max_iter`` is exhausted.
+    The pairs become canonical edges (``u > v``, no self-loops, distinct)
+    and one size probe, the edge-set checksum, picks the branch:
 
-    r6: isolated 2-node components PRE-CONTRACT before the star loop.
-    At realistic dup rates most near-dup clusters are exact pairs — an
-    edge whose endpoints BOTH have degree 1 is its entire component, so
-    its labels (u→v, v→v; v is the min under the canonical u>v
-    orientation) are known with zero iterations. The split costs one
-    degree aggregation + one join; the loop then runs only on the
-    residual edge set and is skipped outright when it's empty. Degree
-    is a whole-graph property, so pre-contracted nodes cannot reappear
-    in the residual — the two label sets are disjoint by construction.
-    Measured at sf0.1 (dedup_cc_survivors): 223 of 256 edges (87%)
-    pre-contract, so every star round shuffles an 8× smaller residual;
-    wall time on local[32] is noise-neutral (4.31 s vs 4.26 s median —
-    per-round cost there is job-scheduling-dominated, not data-
-    dominated), which is exactly the profile that flips to a win when
-    rounds shuffle terabytes instead of kilobytes; see SCALE.md.
-
-    r6, ``local_threshold``: size-adaptive residual solve. When the
-    post-contraction residual edge count (free — it's the checksum's
-    count) is ≤ the bound, the residual is collected (≤ threshold
-    rows, ~MBs at the 200k default) and solved with driver union-find
-    instead of ~10 scheduling-dominated star rounds — the AQE
-    demote-to-broadcast spirit applied to iteration. 0 disables (the
-    differential tests force 0 to keep the star loop covered); the
-    distributed loop remains the path for genuinely large residuals.
+    * at most ``_LOCAL_CC_MAX_EDGES`` edges: one collect and driver
+      union-find whose parent is always the smaller root, so each root is
+      its component's min id — cheaper than ~10 scheduling-bound rounds;
+    * otherwise alternating large-star / small-star (Kiveris et al.,
+      "Connected Components in MapReduce and Beyond", SoCC 2014), which
+      contracts long chains in O(log n) rounds in practice where label
+      propagation needs O(diameter) (a depth-64 chain: ~5 vs 64). Each
+      round is two groupBy+join passes over a shrinking edge set, lazily
+      ``localCheckpoint``ed so the plan stays O(1). Large-star points
+      every node's LARGER neighbors at the min of its closed
+      neighborhood; small-star rewires its smaller-or-equal neighbors
+      (and itself) to that min. At the fixpoint every edge is (node,
+      component-min). Convergence is an order-insensitive checksum
+      (count + hash sum in DECIMAL, ANSI-safe) CONFIRMED by an exact
+      symmetric difference, so a hash collision cannot end the loop
+      early; the labels must then cover every original node, and the
+      loop raises after ``_STAR_MAX_ROUNDS`` rounds.
     """
     edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
-        # lazy like the loop rounds: the initial checksum below is the
+        # lazy like the loop rounds: the size probe below is the
         # materializing action
-        .localCheckpoint(eager=False)
-    )
-    # nodes reads the checkpointed initial edge set (the local `edges`
-    # name is reassigned each round; this plan keeps the original) and is
-    # consumed only by the termination integrity check — lazy, so its
-    # materialization rides that final count instead of an upfront job.
-    nodes = (
-        edges.select(F.col("u").alias("id"))
-        .union(edges.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    # Pre-contraction: split off edges whose both endpoints have degree
-    # 1 — each is a complete 2-node component with known labels. The
-    # star loop below sees only the residual graph.
-    deg = (
-        edges.select(F.col("u").alias("id"))
-        .union(edges.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("d"))
-    )
-    tagged = (
-        edges.join(deg.select(F.col("id").alias("u"), F.col("d").alias("du")), "u")
-        .join(deg.select(F.col("id").alias("v"), F.col("d").alias("dv")), "v")
-        # consumed by both filters below — checkpoint so the degree join
-        # runs once; lazy, materialized by the initial residual checksum
-        .localCheckpoint(eager=False)
-    )
-    iso = tagged.filter((F.col("du") == 1) & (F.col("dv") == 1)).select("u", "v")
-    iso_labels = iso.select(F.col("u").alias("id"), F.col("v").alias("component")).union(
-        iso.select(F.col("v").alias("id"), F.col("v").alias("component"))
-    )
-    edges = (
-        tagged.filter((F.col("du") > 1) | (F.col("dv") > 1))
-        .select("u", "v")
         .localCheckpoint(eager=False)
     )
 
@@ -552,16 +486,31 @@ def connected_components_twostar(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    def _check_and_return(labels: DataFrame) -> DataFrame:
-        # Integrity: the contraction must not lose nodes. A bounded
-        # driver-side count, same pattern as the convergence checks.
-        missing = nodes.join(labels, "id", "left_anti").count()
-        if missing:
-            raise RuntimeError(
-                f"connected_components_twostar lost {missing} nodes — "
-                "edge contraction bug; report with the input pair set"
-            )
-        return labels
+    sig = _checksum(edges)
+    if sig[0] <= _LOCAL_CC_MAX_EDGES:
+        parent: dict = {}
+
+        def find(x):
+            root = x
+            while parent.get(root, root) != root:
+                root = parent[root]
+            while parent.get(x, x) != root:  # path compression
+                parent[x], x = root, parent[x]
+            return root
+
+        rows = edges.collect()
+        for u, v in rows:
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                parent[max(ru, rv)] = min(ru, rv)
+        ids = list({x for r in rows for x in r})
+        id_type = edges.schema["u"].dataType
+        # from pandas (Arrow on): a LocalRelation, whose exact size lets
+        # joins on the labels broadcast without a runtime stage
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame({"id": ids, "component": [find(x) for x in ids]}),
+            StructType([StructField("id", id_type), StructField("component", id_type)]),
+        )
 
     def _large_star(e: DataFrame) -> DataFrame:
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -587,59 +536,14 @@ def connected_components_twostar(
         self_edges = m.select(F.col("u"), F.col("m").alias("v"))
         return rewired.union(self_edges).distinct()
 
-    sig = _checksum(edges)
-    if sig[0] == 0:
-        # every component was an isolated pair — no iterations at all
-        return _check_and_return(
-            iso_labels.groupBy("id").agg(F.min("component").alias("component"))
-        )
-    if sig[0] <= local_threshold:
-        # Size-adaptive execution (r6, the AQE demote-to-broadcast
-        # spirit): after pair pre-contraction the residual graph is
-        # typically orders smaller than the corpus. When its edge count
-        # (already known from the checksum — no extra job) fits the
-        # explicit bound, ten scheduling-dominated star rounds lose to
-        # one bounded collect + driver union-find: O(E α(E)) on ≤
-        # local_threshold edges (~MBs), the same bounded-driver pattern
-        # as the checksum/IVF-centroid sites. The distributed loop below
-        # is the big-graph path and stays pytest-covered via
-        # local_threshold=0.
-        rows = edges.collect()
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in rows:
-            ru, rv = find(r["u"]), find(r["v"])
-            if ru != rv:
-                parent[max(ru, rv)] = min(ru, rv)
-        members: dict = {}
-        for r in rows:
-            for x in (r["u"], r["v"]):
-                members.setdefault(find(x), set()).add(x)
-        out = []
-        for root, xs in members.items():
-            m = min(xs)
-            out.extend((x, m) for x in xs)
-        id_type = edges.schema["u"].dataType
-        local_labels = edges.sparkSession.createDataFrame(
-            out,
-            StructType(
-                [StructField("id", id_type), StructField("component", id_type)]
-            ),
-        )
-        return _check_and_return(
-            local_labels.union(iso_labels)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        )
-    for _ in range(max_iter):
+    # reads the initial edge set (the `edges` name is reassigned each
+    # round); consumed only by the node-loss check at termination
+    nodes = (
+        edges.select(F.col("u").alias("id"))
+        .union(edges.select(F.col("v").alias("id")))
+        .distinct()
+    )
+    for _ in range(_STAR_MAX_ROUNDS):
         prev = edges
         edges = (
             _small_star(_large_star(edges))
@@ -655,15 +559,21 @@ def connected_components_twostar(
             labels = (
                 edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
                 .union(edges.select(F.col("v").alias("id"), F.col("v").alias("component")))
-                .union(iso_labels)
                 .groupBy("id")
                 .agg(F.min("component").alias("component"))
             )
-            return _check_and_return(labels)
+            # Integrity: the contraction must not lose nodes. A bounded
+            # driver-side count, same pattern as the convergence checks.
+            missing = nodes.join(labels, "id", "left_anti").count()
+            if missing:
+                raise RuntimeError(
+                    f"connected_components_twostar lost {missing} nodes — "
+                    "edge contraction bug; report with the input pair set"
+                )
+            return labels
         sig = new_sig
     raise RuntimeError(
-        f"connected_components_twostar did not converge in max_iter={max_iter} "
-        "rounds; raise max_iter"
+        f"connected_components_twostar did not converge in {_STAR_MAX_ROUNDS} star rounds"
     )
 
 

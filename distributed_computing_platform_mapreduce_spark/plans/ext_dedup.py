@@ -369,8 +369,9 @@ def dedup_survivors_suite_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``cc`` (transitive closure — the composition a real LLM data
       pipeline runs): ``minhash_lsh_pairs`` (banded candidates, exact
       verify, no all-pairs self-join) →
-      ``connected_components_twostar`` (alternating large/small-star,
-      O(log n) rounds, per-round localCheckpoint) → one min-id survivor
+      ``connected_components_twostar`` (driver union-find up to 200k
+      edges, else alternating large/small-star, O(log n) rounds, per-round
+      localCheckpoint) → one min-id survivor
       per component; in the A~B~C chain the whole cluster collapses to
       A. Oracle: DuckDB ``WITH RECURSIVE`` transitive closure over the
       exact-Jaccard graph. Semantics anchor: the reference's only dedup

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from distributed_computing_platform_mapreduce_spark.compat.maplejuice import juice, maple, wc_juice, wc_maple
 from distributed_computing_platform_mapreduce_spark.operators import dedup
+from cc_branches import twostar_both_branches
 
 # Words over a small alphabet (plus a unicode letter) force collisions
 # and repeated keys; lines of 0..6 words include empties.
@@ -227,21 +228,15 @@ def test_twostar_cc_equals_label_propagation(spark, edge_list):
     }
     # label propagation labels self-loop-only nodes too; twostar drops
     # self-loops up front, so compare on the union contract: every node
-    # in any NON-self pair must agree. Run BOTH residual strategies —
-    # the r6 adaptive driver union-find (default threshold) and the
-    # distributed star loop (threshold 0).
+    # in any NON-self pair must agree, on both branches (the driver
+    # union-find and the star loop), and each branch must label exactly
+    # those nodes.
     nonself = {n for a, b in edge_list if a != b for n in (a, b)}
-    for thresh in (200_000, 0):
-        star = {
-            (r["id"], r["component"])
-            for r in dedup.connected_components_twostar(
-                pairs, local_threshold=thresh
-            ).collect()
-        }
-        assert {p for p in star if p[0] in nonself} == {
-            p for p in label if p[0] in nonself
-        }, thresh
-        assert {p[0] for p in star} == nonself, thresh
+    star = twostar_both_branches(pairs)
+    assert {p for p in star if p[0] in nonself} == {
+        p for p in label if p[0] in nonself
+    }
+    assert {p[0] for p in star} == nonself
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])

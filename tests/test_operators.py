@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from distributed_computing_platform_mapreduce_spark.operators import dedup, similarity
 from distributed_computing_platform_mapreduce_spark.operators.asof import asof_join_backward
 from distributed_computing_platform_mapreduce_spark.sources.catalog import load_table
+from cc_branches import twostar_both_branches
 
 
 # --- degenerate documents ---------------------------------------------------
@@ -2164,27 +2165,47 @@ def test_asof_join_rejects_colliding_columns(spark):
         )
 
 
-def test_twostar_cc_deep_chain_in_log_rounds(spark):
+def test_twostar_cc_deep_chain_in_log_rounds(spark, monkeypatch):
     """A depth-64 chain needs 64 label-propagation rounds but must
-    finish in O(log n) star rounds — max_iter=8 forces the log-round
-    claim, and every node must map to component 0."""
+    finish in O(log n) star rounds — a cap of 8 star rounds forces the
+    log-round claim, and every node must map to component 0 on both
+    branches (the driver path solves the 64 edges by default)."""
     chain = spark.createDataFrame([(i, i + 1) for i in range(64)], ["id_a", "id_b"])
-    # local_threshold=0 forces the distributed star loop (the default
-    # would solve 64 edges on the driver via the r6 adaptive path)
-    comps = dedup.connected_components_twostar(
-        chain, max_iter=8, local_threshold=0
-    ).collect()
+    monkeypatch.setattr(dedup, "_STAR_MAX_ROUNDS", 8)
+    comps = twostar_both_branches(chain)
     assert len(comps) == 65
-    assert {r["component"] for r in comps} == {0}
-    # the adaptive local path must agree exactly
-    local = dedup.connected_components_twostar(chain, max_iter=8).collect()
-    assert sorted(map(tuple, local)) == sorted(map(tuple, comps))
+    assert {c for _, c in comps} == {0}
 
 
-def test_twostar_cc_raises_on_nonconvergence(spark):
+def test_twostar_cc_raises_on_nonconvergence(spark, monkeypatch):
     chain = spark.createDataFrame([(i, i + 1) for i in range(64)], ["id_a", "id_b"])
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(dedup, "_STAR_MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components_twostar(chain, max_iter=1, local_threshold=0)
+        dedup.connected_components_twostar(chain)
+
+
+def test_twostar_cc_edge_bound_picks_branch(spark, monkeypatch):
+    """The edge bound is compared with the CANONICAL edge count, taken
+    after duplicates, reversed pairs and self-loops are dropped: 3 edges
+    at a bound of 3 take the driver path (labels built from a local
+    relation), 4 take the star loop. Both match label propagation."""
+    monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", 3)
+    three = spark.createDataFrame(
+        [(2, 1), (1, 2), (2, 1), (3, 2), (5, 4), (4, 4), (3, 3)], ["id_a", "id_b"]
+    )
+    four = spark.createDataFrame(
+        [(2, 1), (1, 2), (3, 2), (5, 4), (4, 5), (4, 4), (5, 3)], ["id_a", "id_b"]
+    )
+    for pairs, local in ((three, True), (four, False)):
+        out = dedup.connected_components_twostar(pairs)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        assert ("LocalRelation" in plan) == local, plan
+        label = {
+            (r["id"], r["component"])
+            for r in dedup.connected_components(pairs).collect()
+        }
+        assert {(r["id"], r["component"]) for r in out.collect()} == label
 
 
 def test_dedup_survivors_cc_algorithms_agree(spark, sf_dir):
@@ -2901,16 +2922,13 @@ def test_remove_repeated_paragraphs_regex_sep_and_id_collision(spark):
 
 
 def test_twostar_cc_pure_pair_graph_skips_iteration(spark):
-    """A graph of only isolated pairs is fully handled by the r6
-    pre-contraction fast path (residual edge set empty — zero star
-    rounds), and mixed graphs agree with min-label propagation."""
+    """A graph of only isolated pairs labels each pair with its min id,
+    and mixed graphs agree with min-label propagation — on both the
+    driver union-find and the star loop."""
     pairs = spark.createDataFrame(
         [(2, 1), (4, 3), (6, 5), (8, 7)], ["id_a", "id_b"]
     )
-    got = {
-        (r["id"], r["component"])
-        for r in dedup.connected_components_twostar(pairs).collect()
-    }
+    got = twostar_both_branches(pairs)
     assert got == {(1, 1), (2, 1), (3, 3), (4, 3), (5, 5), (6, 5), (7, 7), (8, 7)}
     # mixed: pairs + a 4-chain + a triangle sharing no nodes
     mixed = spark.createDataFrame(
@@ -2921,17 +2939,9 @@ def test_twostar_cc_pure_pair_graph_skips_iteration(spark):
         (r["id"], r["component"])
         for r in dedup.connected_components(mixed).collect()
     }
-    # both residual-graph strategies must agree with label propagation:
-    # the r6 adaptive local union-find (default) AND the star loop
-    for thresh in (200_000, 0):
-        star = {
-            (r["id"], r["component"])
-            for r in dedup.connected_components_twostar(
-                mixed, local_threshold=thresh
-            ).collect()
-        }
-        assert star == label, thresh
-        assert {(10, 10), (11, 10), (12, 10), (13, 10), (20, 20), (21, 20), (22, 20)} <= star
+    star = twostar_both_branches(mixed)
+    assert star == label
+    assert {(10, 10), (11, 10), (12, 10), (13, 10), (20, 20), (21, 20), (22, 20)} <= star
 
 
 # --- BPE tokenizer (operators/bpe.py) ---------------------------------------
