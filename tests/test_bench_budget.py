@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -171,11 +172,9 @@ def test_compact_record_bounds_heavy_shed_lists():
     shed markers; the compact line must fit the tail window anyway
     (r15 review: the lists were the one unbounded term left)."""
     shed = (
-        [f"query_{q}" for q in bench.BENCH_QUERIES]
+        [p.name for p in bench.POINTS]
         + [f"scal_c{c}" for c in (2, 4, 8, 16, 32)]
-        + ["ref_scale_1gb", "slope_1gb", "incremental_prefilter_ab",
-           "skew", "media", "r8_crop", "r10_crop", "rwlg_4gb", "skew_1gb",
-           "scalability", "canary_rerun"]
+        + ["rwlg_4gb", "skew_1gb", "scalability", "canary_rerun"]
         + [f"rwlg_1gb_extra_marker_{i}_second_run" for i in range(6)]
     )
     rec = _fake_record(4, "main_sweep", shed, ["skew_1gb", "rwlg_4gb"])
@@ -272,3 +271,58 @@ def test_compact_record_carries_restored_marker():
     rec["restored_attempt"] = 1
     back = json.loads(bench._compact_record(rec, limit=1900))
     assert back["restored_attempt"] == 1
+
+
+#: Every point the main sweep records, by the block of the old sweep that
+#: timed it: the registry queries, the reference-scale rows, the skew A/B,
+#: the media rows, and the two operator crops (the second ends with the
+#: 1 GB slope rows).
+SWEEP_POINTS = [
+    "wordcount", "rwlg", "tpch_q1", "tpch_q3", "tpch_q5", "tpch_q6",
+    "window_ranking_suite", "window_session", "dedup_minhash_lsh",
+    "similarity_topk_suite", "ranking_bm25", "text_ngram_lm", "interval_join",
+    "dedup_cc_survivors", "sequence_packing",
+    "wordcount_50mb", "rwlg_50mb", "wordcount_200mb", "rwlg_200mb",
+    "wordcount_1gb", "rwlg_1gb", "rwlg_1gb_capped",
+    "rwlg_skew_naive", "rwlg_skew_salted",
+    "image_neardup", "video_neardup", "audio_neardup",
+    "dedup_spans_k50", "cluster_sample", "pack_bins_bfd",
+    "incremental_index_build", "incremental_dedup_increment",
+    "bpe_train", "bpe_encode_ids", "cosine_topk_exact_scan",
+    "cosine_topk_int8_scan", "cosine_topk_int8_rerank",
+    "stream_incr_dedup_3batch", "semdedup", "training_order_rank",
+    "dedup_spans_k50_1gb", "incremental_increment_1gb",
+    "incremental_small_increment_1gb", "incremental_small_increment_1gb_bloom",
+    "incremental_small_increment_1gb_bcast", "bpe_train_incr_30k_1gb",
+]
+SLOPE_1GB = SWEEP_POINTS[-6:]
+REF_1GB = ["wordcount_1gb", "rwlg_1gb", "rwlg_1gb_capped"]
+
+
+def test_points_table_pins_the_sweep():
+    """The main sweep is one table: exactly the 46 points the sweep
+    records, each once, in one of six operator families, with the
+    registry rows equal to BENCH_QUERIES, the 1 GB slope rows last, and
+    every row's sample policy and deadline gate as declared."""
+    names = [p.name for p in bench.POINTS]
+    assert len(SWEEP_POINTS) == 46
+    assert len(names) == len(set(names))
+    assert sorted(names) == sorted(SWEEP_POINTS)
+    assert {p.family for p in bench.POINTS} <= {
+        "maplejuice", "relational", "dedup", "similarity", "text", "media"
+    }
+    assert sorted(p.name for p in bench.POINTS if p.plan) == sorted(bench.BENCH_QUERIES)
+    assert names[-6:] == SLOPE_1GB
+    assert {p.setup for p in bench.POINTS} - {None} == set(bench.SETUPS)
+    for p in bench.POINTS:
+        if p.name in SLOPE_1GB:
+            assert (p.samples, p.pick) == (2, statistics.median), p.name
+            assert p.gate == (1500.0 if "small_increment" in p.name else 300.0), p.name
+        elif p.name in REF_1GB:
+            assert (p.samples, p.pick, p.gate) == (2, min, 240.0), p.name
+        else:
+            assert (p.samples, p.pick) == (None, statistics.median), p.name
+        if p.name in bench.BENCH_QUERIES:
+            assert p.gate == 45.0, p.name
+        elif p.name.startswith("rwlg_skew_"):
+            assert p.gate == 180.0, p.name

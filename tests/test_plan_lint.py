@@ -430,23 +430,28 @@ def test_runtime_bloom_filter_join_pruning(spark, tmp_path):
 def test_bench_plain_pipelines_match_registry_legs(spark, sf_dir):
     """bench.py times PRE-FOLD pipelines for labels whose registry rows
     became tagged suites in r8 (building the full suite per timed run is
-    not free — the ivf leg collects centroids, the cc leg runs CC rounds
-    at plan-build). This pins the two forms same-answer: each plain
-    pipeline must equal the corresponding leg of its folded suite row,
-    so a drift between what the bench times and what the driver checks
-    cannot go unnoticed."""
+    not free — the ivf leg collects centroids, and the cc leg runs its
+    CC solve while the plan is built: one edge-count probe, then one
+    driver collect at <= 200k edges). This pins the two forms
+    same-answer: each plain pipeline, read from its row of bench.POINTS,
+    must equal the corresponding leg of its folded suite row, so a drift
+    between what the bench times and what the driver checks cannot go
+    unnoticed."""
     import sys
 
     sys.path.insert(0, "/root/repo")
     import bench
 
-    plain = bench._bench_plain_queries(spark, sf_dir)
+    points = {p.name: p for p in bench.POINTS}
+
+    def plain(name):
+        return points[name].plan(spark, sf_dir)
 
     def rows(df, cols):
         return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
     # minhash: the lsh leg minus its tag column
-    got = rows(plain["dedup_minhash_lsh"](), ["id_a", "id_b", "jaccard"])
+    got = rows(plain("dedup_minhash_lsh"), ["id_a", "id_b", "jaccard"])
     want = rows(
         QUERIES["dedup_minhash_lsh"](spark, sf_dir).filter(F.col("leg") == "lsh"),
         ["id_a", "id_b", "jaccard"],
@@ -455,7 +460,7 @@ def test_bench_plain_pipelines_match_registry_legs(spark, sf_dir):
 
     # session windows: suite leg carries (window_start, key-as-string)
     got = rows(
-        plain["window_session"]().select(
+        plain("window_session").select(
             F.col("user_id").cast("string").alias("key"),
             F.col("session_start").alias("window_start"),
             "n_events",
@@ -470,7 +475,7 @@ def test_bench_plain_pipelines_match_registry_legs(spark, sf_dir):
     assert got == want and len(want) > 0
 
     # cc survivors: the cc policy leg
-    got = rows(plain["dedup_cc_survivors"](), ["doc_id", "lang", "source"])
+    got = rows(plain("dedup_cc_survivors"), ["doc_id", "lang", "source"])
     want = rows(
         QUERIES["dedup_survivors_suite"](spark, sf_dir).filter(F.col("policy") == "cc"),
         ["doc_id", "lang", "source"],
@@ -479,7 +484,7 @@ def test_bench_plain_pipelines_match_registry_legs(spark, sf_dir):
 
     # similarity: exact+lsh legs, tags included on both sides
     cols = ["method", "query_id", "neighbor_id", "rank", "cos"]
-    got = rows(plain["similarity_topk_suite"](), cols)
+    got = rows(plain("similarity_topk_suite"), cols)
     want = rows(
         QUERIES["similarity_topk_suite"](spark, sf_dir).filter(
             F.col("method").isin(["exact", "lsh"])
@@ -491,7 +496,7 @@ def test_bench_plain_pipelines_match_registry_legs(spark, sf_dir):
     # interval join: the suite's interval leg carries the pair under
     # (id_a, id_b)
     got = rows(
-        plain["interval_join"]().select(
+        plain("interval_join").select(
             F.col("err_id").alias("id_a"), F.col("click_id").alias("id_b")
         ),
         ["id_a", "id_b"],

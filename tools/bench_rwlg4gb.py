@@ -16,10 +16,6 @@ makes the 4 GB uniform point a per-round datum:
   since r15: the shape estimate caches per plan, so the warm run pays
   the sampling job and the timed runs measure the chosen layout's
   steady state (r≤14 timed runs each re-paid the probe).
-- ``rwlg_4gb_uniform_window``: the r13 failure mode itself, kept under
-  a shorter budget so the record shows WHY the chooser exists — run
-  only when ``SPARK_GRAFT_BENCH_RWLG4GB_AB=1`` (the A/B costs its whole
-  budget when the plan degenerates, by construction).
 
 A leg that exceeds its budget is cancelled via
 ``sparkContext.cancelAllJobs()`` and recorded as
@@ -165,44 +161,23 @@ def main() -> None:
         # every timed run — a few seconds at this volume).
         rwlg_collect(edges()).write.format("noop").mode("overwrite").save()
 
-    legs = [("rwlg_4gb_uniform_auto", run_auto, 900.0, 2)]
-    if os.environ.get("SPARK_GRAFT_BENCH_RWLG4GB_AB") == "1":
-        # the r13 failure mode, for the A/B: expected to blow its budget
-        def run_window():
-            rwlg_collect(edges(), layout="window").write.format("noop").mode(
-                "overwrite"
-            ).save()
-
-        legs.append(("rwlg_4gb_uniform_window", run_window, 900.0, 1))
-
-    for key, fn, budget, n_runs in legs:
-        try:
-            status, first = _run_budgeted(spark, fn, budget)  # warm (plan+codegen)
-            if status == "killed":
-                kills[key] = {"killed": "straggler_budget", "budget_s": budget}
-                _flush()
-                continue
-            samples = []
-            remaining = True
-            for _ in range(n_runs):
-                status, elapsed = _run_budgeted(spark, fn, budget)
-                if status == "killed":
-                    kills[key] = {
-                        "killed": "straggler_budget",
-                        "budget_s": budget,
-                        "note": "warm run terminated; a timed run did not",
-                    }
-                    remaining = False
-                    break
-                samples.append(elapsed)
-            if not remaining:
-                _flush()
-                continue
+    # warm once (plan + codegen), then 2 timed runs, each under the budget
+    key, budget = "rwlg_4gb_uniform_auto", 900.0
+    try:
+        status, _ = _run_budgeted(spark, run_auto, budget)
+        samples: list[float] = []
+        while status == "ok" and len(samples) < 2:
+            status, elapsed = _run_budgeted(spark, run_auto, budget)
+            samples.append(elapsed)
+        if status == "killed":
+            kills[key] = {"killed": "straggler_budget", "budget_s": budget}
+            if samples:
+                kills[key]["note"] = "warm run terminated; a timed run did not"
+        else:
             times[key] = round(statistics.median(samples), 3)
             spread[key] = [round(min(samples), 3), round(max(samples), 3)]
-        except Exception as exc:  # noqa: BLE001
-            errors[key] = bench._error_line(exc)
-        _flush()  # cumulative per-leg record: a later kill keeps this leg
+    except Exception as exc:  # noqa: BLE001
+        errors[key] = bench._error_line(exc)
 
     _flush()
     # the record is printed — exit hard rather than risk a wedged stop()

@@ -36,9 +36,10 @@ Design choices, pinned so the curve measures what it claims:
   compute inside ~2.5 s of fixed cost — and was replaced per VERDICT
   #5; the flat curve's lesson lives in SCALE.md.)
 - **Warm + median.** Each query runs once untimed (Catalyst analysis +
-  janino codegen + JIT are one-time per plan shape), then
-  ``SPARK_GRAFT_BENCH_SCAL_RUNS`` (default 2) timed passes; the JSON
-  carries median + min/max.
+  janino codegen + JIT are one-time per plan shape), then ``N_RUNS``
+  (2) timed passes; the JSON carries median + min/max under ``times``
+  and ``spread``, keyed ``scal_<q>_c<N>`` as the bench record files
+  them.
 """
 
 from __future__ import annotations
@@ -52,6 +53,8 @@ import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
+
+N_RUNS = 2
 
 
 def main() -> None:
@@ -67,7 +70,6 @@ def main() -> None:
     from distributed_computing_platform_mapreduce_spark.operators import dedup
     from pyspark.sql import functions as F
 
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_SCAL_RUNS", "2")))
     spark = get_spark(
         f"distributed-computing-platform-mapreduce-spark-scal-c{args.cores}",
         master=f"local[{args.cores}]",
@@ -102,15 +104,16 @@ def main() -> None:
     times: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
-    for key, fn in (
+    for q, fn in (
         ("scal_wc200", run_wc),
         ("scal_rwlg200", run_rwlg),
         ("scal_spans200", run_spans),
     ):
+        key = f"{q}_c{args.cores}"
         try:
             fn()  # untimed warm: plan analysis + codegen + JIT
             samples = []
-            for _ in range(n_runs):
+            for _ in range(N_RUNS):
                 t0 = time.perf_counter()
                 fn()
                 samples.append(time.perf_counter() - t0)
@@ -124,10 +127,10 @@ def main() -> None:
         json.dumps(
             {
                 "cores": args.cores,
-                "queries": times,
+                "times": times,
                 "spread": spread,
                 "errors": errors,
-                "runs": n_runs,
+                "runs": N_RUNS,
                 "sf_dir": args.sf_dir,
             }
         )
