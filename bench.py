@@ -149,7 +149,7 @@ N_RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 # ---------------------------------------------------------------------------
 BENCH_DEADLINE_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_DEADLINE_SEC", "2700"))
 _BENCH_T0 = time.monotonic()
-#: Seconds reserved at the very end for emitting records + spark.stop().
+#: Seconds reserved at the very end for emitting records and stopping the JVM.
 FINAL_MARGIN_SEC = 90.0
 
 #: Post-sweep subprocess sections in EXECUTION order (= judge priority:
@@ -1654,6 +1654,32 @@ def _run_sweep(
     return times, spread, errors, spark
 
 
+def _stop_jvm(spark) -> None:
+    """Stop the session, shut the py4j gateway and wait for the JVM to
+    exit, as perfbench's ``Bench.close`` does; a dead JVM is only
+    reaped, and one that outlives the wait is killed."""
+    import subprocess
+
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    proc = getattr(gateway, "proc", None)
+    if not _spark_is_dead(spark):
+        try:
+            spark.stop()
+            gateway.shutdown()
+        except Exception:  # noqa: BLE001 — the record is already out
+            pass
+    if proc is not None:
+        if proc.stdin:
+            proc.stdin.close()
+        try:
+            proc.wait(timeout=60)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+
+
 def _run_tool_subprocess(
     name: str, tool_file: str, budget_s: float, extra_args: list[str] | None = None
 ) -> tuple[dict, dict, dict, dict, dict]:
@@ -2008,6 +2034,9 @@ def main() -> None:
     # the declared priority order, and the compact line always fits the
     # driver's tail window — a kill anywhere leaves a parsed record.
     _emit_records(_record("main_sweep"))
+    # The sections start JVMs of their own (rwlg_4gb: a 16 g heap); next
+    # to the live 8 g bench JVM they overcommit a 15 GB host.
+    _stop_jvm(spark)
 
     for name, est in SECTION_PLAN:
         if not _gate(est):
@@ -2025,16 +2054,7 @@ def main() -> None:
             errors[name] = _error_line(exc)
         _emit_records(_record(f"after_{name}"))
 
-    final_compact = _emit_records(_record(None))
-    try:
-        spark.stop()
-    except Exception:  # noqa: BLE001 — the record is already out
-        pass
-    # re-print the compact line AFTER stop(): JVM shutdown can write to
-    # stderr, and the driver tails the MERGED stream — the last thing in
-    # it must be the parseable record
-    print(final_compact)
-    sys.stdout.flush()
+    _emit_records(_record(None))
 
 
 if __name__ == "__main__":

@@ -183,34 +183,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 32
-) -> DataFrame:
-    """MinHash signature per document: sig[i] = min over shingles of
-    (aᵢ·xxhash64(shingle) + bᵢ) mod P.
-
-    Shape: explode shingles → hash once → groupBy(doc) with num_hashes
-    ``min`` aggregates (map-side partial: each partition collapses to 32
-    values per doc before the shuffle). The earlier all-array form
-    re-inlined the shingle pipeline into every permutation — quadratic
-    codegen blowup (200 s at sf0.1 vs ~2 s for this form). The (aᵢ,bᵢ)
-    family is fixed/deterministic (seeded LCG constants).
-    """
-    rnd = _lcg_params(num_hashes)
-    hashed = shingle_rows(df, id_col, text_col, n).select(
-        "id", F.pmod(F.xxhash64("shingle"), F.lit(_P)).alias("h")
-    )
-    mins = hashed.groupBy("id").agg(
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_P)).alias(f"__sig{i}")
-            for i, (a, b) in enumerate(rnd)
-        ]
-    )
-    return mins.select(
-        "id", F.array(*[F.col(f"__sig{i}") for i in range(num_hashes)]).alias("signature")
-    )
-
-
 def _lcg_params(k: int) -> list[tuple[int, int]]:
     """Deterministic (a,b) pairs from a fixed linear congruential stream
     (no RNG import → reproducible across runs/versions)."""
@@ -228,9 +200,16 @@ def _signature_agg(hashed: DataFrame, num_hashes: int) -> DataFrame:
     """``(id, signature array<long>, sz)`` from an ``(id, h)`` table —
     the ONE MinHash signature aggregate, shared by
     :func:`minhash_index` and :func:`minhash_lsh_pairs`:
-    ``groupBy(id).agg(count(*), num_hashes × min((a·h+b) % P))``, with
-    map-side partial aggregation collapsing each partition to one row
-    per doc before the exchange.
+    ``groupBy(id).agg(array(min((a₁·h+b₁) % P), …) AS signature,
+    count(*) AS sz)``, with map-side partial aggregation collapsing each
+    partition to one row per doc before the exchange.
+
+    The signature is ONE SQL expression (only the Python integers of
+    :func:`_lcg_params` are interpolated), which the JVM parses once.
+    Built from Column objects instead, every ``F.min``/``*``/``+``/``%``
+    is several py4j round trips plus a call-site stack walk, so plan
+    build grew with ``num_hashes`` (~94 round trips per hash, banding
+    included) and dominated the driver time of small dedup runs.
 
     Measured note (r16): a zero-shuffle numpy ``mapInPandas`` fold over
     the id-contiguous exploded stream was built and interleaved-A/B'd
@@ -239,18 +218,9 @@ def _signature_agg(hashed: DataFrame, num_hashes: int) -> DataFrame:
     Arrow boundary costs far more than the JVM hash-aggregate it
     replaces, exactly the §4.1 "you cannot remove the transfer cost"
     caveat. The JVM aggregate stays."""
-    rnd = _lcg_params(num_hashes)
-    mins = hashed.groupBy("id").agg(
-        F.count("*").alias("sz"),
-        *[
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_P)).alias(f"__sig{i}")
-            for i, (a, b) in enumerate(rnd)
-        ],
-    )
-    return mins.select(
-        "id",
-        F.array(*[F.col(f"__sig{i}") for i in range(num_hashes)]).alias("signature"),
-        "sz",
+    mins = ", ".join(f"min(({a} * h + {b}) % {_P})" for a, b in _lcg_params(num_hashes))
+    return hashed.groupBy("id").agg(
+        F.expr(f"array({mins}) AS signature"), F.count("*").alias("sz")
     )
 
 
@@ -319,8 +289,9 @@ def minhash_lsh_pairs(
         .distinct()
         # The pair set feeds two consumers (the broadcast id filter below
         # and the verify join) — checkpoint it so the LSH pipeline runs
-        # once, not once per consumer. Lazy: materializes inside the
-        # broadcast-build job, reused by the main join. Bounded size
+        # once, not once per consumer. Not lazy under AQE: building the
+        # checkpoint's RDD runs the upstream shuffle stages at this call;
+        # only the final stage waits for the first action. Bounded size
         # (candidate pairs, not shingles).
         .localCheckpoint(eager=False)
     )
@@ -472,8 +443,8 @@ def connected_components_twostar(pairs: DataFrame) -> DataFrame:
         .filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
-        # lazy like the loop rounds: the size probe below is the
-        # materializing action
+        # under AQE eager=False runs the distinct's upstream shuffle stage
+        # at this call; the size probe below runs the final stage
         .localCheckpoint(eager=False)
     )
 
@@ -670,8 +641,10 @@ def simhash(
 
     For each bit position, sum +1/−1 votes of each distinct token's
     hash bit; fingerprint bit = sign of the vote. Same explode →
-    groupBy shape as minhash_signatures (partial-agg friendly, no
-    per-row expression blowup).
+    groupBy shape as :func:`_signature_agg` (partial-agg friendly, no
+    per-row expression blowup), and like it the fold is one SQL
+    expression the JVM parses once, so plan build does not grow with
+    ``bits``.
 
     ``hash_fn`` picks the token hash: ``"xxhash64"`` (default — JVM
     codegen, the fast path) or ``"fnv1a64"`` (Arrow-batched
@@ -707,22 +680,14 @@ def simhash(
     else:
         raise ValueError(f"unknown hash_fn {hash_fn!r} (xxhash64|fnv1a64)")
 
-    def mask(i: int) -> Column:
-        return F.lit(1 << i) if i < 63 else F.lit(-(1 << 63))
-
-    votes = hashed.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when(F.col("h").bitwiseAND(mask(i)) != 0, 1).otherwise(-1)
-            ).alias(f"__v{i}")
-            for i in range(bits)
-        ]
+    # term i keeps bit i (shiftleft(1L, 63) is the sign bit) iff its vote
+    # sum is positive; the terms' bits are disjoint, so ^ assembles them
+    fingerprint = " ^ ".join(
+        f"CASE WHEN sum(CASE WHEN h & shiftleft(1L, {i}) != 0 THEN 1 ELSE -1 END) > 0 "
+        f"THEN shiftleft(1L, {i}) ELSE 0L END"
+        for i in range(bits)
     )
-    fingerprint = None
-    for i in range(bits):
-        term = F.when(F.col(f"__v{i}") > 0, mask(i).cast("long")).otherwise(F.lit(0).cast("long"))
-        fingerprint = term if fingerprint is None else fingerprint.bitwiseXOR(term)
-    return votes.select("id", fingerprint.alias("simhash"))
+    return hashed.groupBy("id").agg(F.expr(f"{fingerprint} AS simhash"))
 
 
 def hamming_pairs(
@@ -770,8 +735,9 @@ def hamming_pairs(
     # The self-join consumes `blocked` twice, and upstream print
     # pipelines are expensive (simhash's vote aggregation; perceptual
     # hashes DECODE the media). Cut the lineage so the prints compute
-    # once — the checkpoint is bounded at blocks·n 16-byte rows (lazy:
-    # materializes inside the join's first job).
+    # once — the checkpoint is bounded at blocks·n 16-byte rows. Under
+    # AQE eager=False still runs the upstream shuffle stages (simhash's
+    # vote exchange) at this call; only the final stage waits.
     blocked = blocked.localCheckpoint(eager=False)
     a = blocked.alias("a")
     b = blocked.alias("b")
@@ -1324,30 +1290,18 @@ def minhash_index(
 def _index_band_buckets(index: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, band, bucket) from a signature index — the identical banding
     formula `minhash_lsh_pairs` uses, so buckets collide across
-    increments built at different times."""
+    increments built at different times. One SQL expression (``inline``
+    unpacks the band structs into the two columns), like
+    :func:`_signature_agg`; the bucket values are pinned against
+    persisted indexes in ``test_index_band_buckets_golden``."""
     r = num_hashes // bands
-    return index.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.element_at("signature", i * r + j + 1)
-                                    for j in range(r)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    buckets = ", ".join(
+        f"named_struct('band', {i}, 'bucket', xxhash64(concat_ws(',', "
+        + ", ".join(f"element_at(signature, {i * r + j + 1})" for j in range(r))
+        + ")))"
+        for i in range(bands)
+    )
+    return index.selectExpr("id", f"inline(array({buckets}))")
 
 
 # --- history-prefilter policy (r13, executable form of SCALE.md's measured
@@ -1498,13 +1452,12 @@ def incremental_minhash_pairs(
         # measured 10× lsh_bucket lesson; the r15 similarity rewrite
         # removed the same shape). The unrolled form is a flat codegen
         # expression; integer sum then one divide — identical values.
-        matches = sum(
-            F.when(
-                F.element_at("sig_n", i + 1) == F.element_at("sig_o", i + 1), 1
-            ).otherwise(0)
-            for i in range(num_hashes)
+        # One SQL text, so building it costs no round trip per component.
+        matches = " + ".join(
+            f"CASE WHEN element_at(sig_n, {i}) = element_at(sig_o, {i}) THEN 1 ELSE 0 END"
+            for i in range(1, num_hashes + 1)
         )
-        est = matches.cast("double") / F.lit(float(num_hashes))
+        est = F.expr(f"CAST({matches} AS DOUBLE) / {float(num_hashes)}D")
         return (
             cand.join(sig_n, "id_new")
             .join(other_sigs, "id_other")

@@ -876,18 +876,19 @@ def embed_texts(
         .otherwise(F.lit(-1.0))
         .alias("sign"),
     )
-    sums = hashed.groupBy("id").agg(
-        *[
-            F.coalesce(
-                F.sum(F.when(F.col("bucket") == i, F.col("sign"))), F.lit(0.0)
-            ).alias(f"__b{i}")
-            for i in range(dim)
-        ]
+    # the bucket sums as one SQL expression: parsed once by the JVM, so
+    # plan build does not grow with ``dim`` (see dedup._signature_agg)
+    sums = ", ".join(
+        f"coalesce(sum(CASE WHEN bucket = {i} THEN sign END), 0.0D)" for i in range(dim)
     )
-    vec = F.array(*[F.col(f"__b{i}") for i in range(dim)])
+    vec = F.col("vec")
     nrm = F.sqrt(F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
     unit = F.when(nrm > 0, F.transform(vec, lambda x: x / nrm)).otherwise(vec)
-    return sums.select("id", unit.alias("embedding"))
+    return (
+        hashed.groupBy("id")
+        .agg(F.expr(f"array({sums}) AS vec"))
+        .select("id", unit.alias("embedding"))
+    )
 
 
 # --- int8 quantization (memory-bandwidth lever for corpus-scan ANN) ---------

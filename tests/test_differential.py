@@ -912,3 +912,118 @@ def test_semdedup_pairs_equal_bruteforce(spark, vecs, block_rows, threshold):
                 if sims[i, j] >= threshold:
                     want.add((int(min(idx[i], idx[j])), int(max(idx[i], idx[j]))))
     assert got == want
+
+
+# --- SQL-text aggregates vs their Python twins -------------------------------
+# simhash, _signature_agg and _index_band_buckets each build their wide
+# per-index expression as one SQL string; these pin the strings bit for
+# bit on tiny inputs.
+
+
+def test_signature_agg_matches_python(spark):
+    """Every component is min over the doc's h of (a·h + b) mod P, for
+    the (a, b) of _lcg_params; sz counts the rows. h = 0 and h = P−1
+    are the ends of the pmod range minhash feeds in."""
+    P = dedup._P
+    hs = {1: [0, P - 1, 12345], 2: [P - 1], 3: [0], 4: [7, 7, 2**30]}
+    df = spark.createDataFrame(
+        [(i, h) for i, vals in hs.items() for h in vals], "id long, h long"
+    )
+    got = {
+        r["id"]: (list(r["signature"]), r["sz"])
+        for r in dedup._signature_agg(df, 16).collect()
+    }
+    params = dedup._lcg_params(16)
+    want = {
+        i: ([min((a * h + b) % P for h in vals) for a, b in params], len(vals))
+        for i, vals in hs.items()
+    }
+    assert got == want
+
+
+def test_simhash_fnv_matches_python(spark):
+    """simhash(hash_fn="fnv1a64") vs a vote-and-sign fold over
+    fnv1a64_codepoints: bit i is set iff more distinct tokens have bit
+    i set than not (a tie clears it). A one-token doc's print is its
+    token's hash, and "a" hashes with bit 63 set."""
+    import pandas as pd
+
+    texts = {1: "a", 2: "the quick  brown fox", 3: " b b c ", 4: "zz quick", 5: "a b c d e"}
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = {r["id"]: r["simhash"] for r in dedup.simhash(df, "doc_id", "text", hash_fn="fnv1a64").collect()}
+
+    def fold(text: str) -> int:
+        hs = dedup.fnv1a64_codepoints(pd.Series(list(dict.fromkeys(text.split())))).tolist()
+        out = 0
+        for i in range(64):
+            if sum(1 if (h >> i) & 1 else -1 for h in hs) > 0:
+                out |= 1 << i
+        return out - (1 << 64) if out >= 1 << 63 else out
+
+    want = {i: fold(t) for i, t in texts.items()}
+    assert got == want
+    assert got[1] < 0  # bit 63 set: the sign bit round-trips
+
+
+# Bucket values the Column-built banding produced before the SQL-text
+# rewrite: indexes persisted by earlier code (the streaming sink's v=/d=
+# segments) must keep colliding with newly built ones.
+_GOLDEN_SIG_BANDS_32_8 = {
+    1: [81754143194575335, -6221688678431274738, -5033542996142490641, -1976936207843254060,
+        -577576284927945153, 3385888322508023912, -4745563103444778796, 1473652132231953261],
+    2: [2948331192086336258] * 8,
+    3: [-4970404290990080857] * 4
+    + [-8604653565363336042, 4550260470511247596, -7164188866690225774, -1856998271061545395],
+}
+_GOLDEN_SIG_BANDS_8_4 = {
+    1: [5451996740002513371, 3484476116943252211, -1935460195555169431, 5818326966740498402],
+    2: [-855227045086280000] * 4,
+    3: [-4906328335854845112] * 4,
+}
+_GOLDEN_TEXT_BANDS = {
+    10: [1839666281728399621, 3226157250527009293, 767234468413856209, -1918258973481191292,
+         -352625247312750055, -6899400906418718437, 3320087430239532275, -8239494667440400216],
+    11: [6228962487150754197, -3708077251630169904, 3257404160722586041, 444888042781029784,
+         -5532836451632237417, 4844299826832293270, 7162511983402816599, 3137822730014654832],
+    12: [7683213709568795902, -938775933239862559, 4641871165125895231, -1294922279909965577,
+         7028285467517311538, -1374699341239096769, 525766200304912001, -3867753188707432962],
+}
+
+
+def test_index_band_buckets_golden(spark):
+    """_index_band_buckets (and, through minhash_index, _signature_agg)
+    reproduce the recorded buckets: hand-made signatures at 32 hashes /
+    8 bands and 8 / 4, plus the index of two near-copies and a short
+    (sentinel) doc."""
+
+    def bands(df, num_hashes, n_bands):
+        out = dedup._index_band_buckets(df, num_hashes, n_bands)
+        assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema.fields[1:]] == [
+            ("band", "int", False),
+            ("bucket", "bigint", False),
+        ]
+        got: dict = {}
+        for r in out.orderBy("id", "band").collect():
+            got.setdefault(r["id"], []).append(r["bucket"])
+        return got
+
+    P = dedup._P
+    sigs = spark.createDataFrame(
+        [
+            (1, [(7919 * i + 1) % P for i in range(32)]),
+            (2, [P - 1] * 32),
+            (3, [0] * 16 + [P - 1 - i for i in range(16)]),
+        ],
+        "id long, signature array<long>",
+    )
+    assert bands(sigs, 32, 8) == _GOLDEN_SIG_BANDS_32_8
+    assert bands(sigs.selectExpr("id", "slice(signature, 1, 8) AS signature"), 8, 4) == _GOLDEN_SIG_BANDS_8_4
+    texts = spark.createDataFrame(
+        [
+            (10, "the quick brown fox jumps over the lazy dog"),
+            (11, "the quick brown fox jumps over a lazy dog"),
+            (12, "short"),
+        ],
+        "doc_id long, text string",
+    )
+    assert bands(dedup.minhash_index(texts, "doc_id", "text"), 32, 8) == _GOLDEN_TEXT_BANDS

@@ -539,3 +539,56 @@ def test_registry_names_pinned():
     assert set(QUERIES) == pinned
     assert set(ORACLES) >= pinned  # every registered query is full-oracle
     assert len(QUERIES) == 50
+
+
+def test_wide_builders_cost_flat_gateway_round_trips(spark, monkeypatch):
+    """Building (no action) the wide per-index expressions of SimHash,
+    the MinHash signature + banding, the incremental estimator and
+    ``embed_texts`` sends as many py4j commands at the wide setting as at
+    the narrow one: each expression is one SQL text the JVM parses, not
+    a Column tree built over the gateway (the Column-built forms sent
+    ~2,400 commands for a 16-bit simhash and ~9,400 for a 64-bit one).
+    Counts commands, not time, so host speed cannot move it; py4j's
+    memory-release commands (``m``) are left out, since finalizers send
+    them for objects freed earlier, whenever Python collects them."""
+    from distributed_computing_platform_mapreduce_spark.operators import dedup, similarity
+
+    client = spark.sparkContext._gateway._gateway_client
+    sent: list[str] = []
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    docs = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id long, text string")
+    hashed = spark.createDataFrame([(1, 5), (2, 7)], "id long, h long")
+    index = dedup._signature_agg(hashed, 32)
+
+    def round_trips(build, width) -> int:
+        sent.clear()
+        build(width)
+        return len(sent)
+
+    builders = {
+        "simhash": (lambda b: dedup.simhash(docs, "doc_id", "text", bits=b), 16, 64),
+        "signature+bands": (
+            lambda k: dedup._index_band_buckets(dedup._signature_agg(hashed, k), k, k // 4),
+            8,
+            32,
+        ),
+        "incremental estimate": (
+            lambda k: dedup.incremental_minhash_pairs(
+                index, index, num_hashes=k, bands=4, prefilter="none"
+            ),
+            8,
+            32,
+        ),
+        "embed_texts": (lambda d: similarity.embed_texts(docs, dim=d), 8, 64),
+    }
+    for name, (build, narrow, wide) in builders.items():
+        build(narrow)  # first build pays one-time class and function lookups
+        n, w = round_trips(build, narrow), round_trips(build, wide)
+        assert w <= 1.25 * n, f"{name}: {n} round trips at {narrow}, {w} at {wide}"
